@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -47,7 +48,7 @@ object Bench {
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.CacheManager",
       org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // Per query: one untimed invocation (JIT, codegen compilation,
     // parquet footers, persisted-subtree build), one timed invocation
     // (steady-state cost, as a resident pipeline would run), then a
@@ -63,7 +64,7 @@ object Bench {
     def run(name: String): Unit =
       try SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         if (failed.add(name))
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
@@ -89,7 +90,7 @@ object Bench {
           Some("\"([A-Za-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(body)
             .map(m => m.group(1) -> m.group(2).toDouble).toMap)
         }
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     val priorQueries: Option[Map[String, Double]] = priorMap("queries")
     val priorShuffle: Option[Map[String, Double]] = priorMap("shuffle_bytes")
     // Per-query shuffle/input byte counters (task-metric sums): a
@@ -148,7 +149,7 @@ object Bench {
         val sc = spark.sparkContext
         val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
         bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     // warmup once, then min of two timed runs — single-run totals
     // swung ~25% from GC/JIT noise at this scale, min-of-2 tracks the
     // steady-state cost the round-over-round comparison needs.
@@ -196,7 +197,7 @@ object Bench {
         val total = infos.map(_.numPartitions).sum
         s"n=${CacheRegistry.trackedCount},parts=$parts/$total," +
           s"mem=${infos.map(_.memSize).sum},disk=${infos.map(_.diskSize).sum}"
-      } catch { case _: Throwable => "unavailable" }
+      } catch { case NonFatal(_) => "unavailable" }
       // blocking: the previous query's block drop must finish here,
       // not during the next query's timed run
       CacheRegistry.releaseAll(blocking = true)
@@ -304,7 +305,7 @@ object Bench {
         val path = java.nio.file.Paths.get(p)
         if (path.getParent != null) java.nio.file.Files.createDirectories(path.getParent)
         java.nio.file.Files.writeString(path, fullLine + "\n")
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     // Quiesce everything, stop Spark, THEN print: the metrics line must
     // be the LAST stdout line so a tail-capture of the run still holds
@@ -312,9 +313,9 @@ object Bench {
     spark.sparkContext.setLogLevel("OFF")
     try org.apache.logging.log4j.core.config.Configurator.setRootLevel(
       org.apache.logging.log4j.Level.OFF)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // stop() is guarded: a shutdown exception must not eat the line
-    try spark.stop() catch { case _: Throwable => () }
+    try spark.stop() catch { case NonFatal(_) => () }
     println(fullLine)
     println(totalLine)
     System.out.flush()

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 
 /** Tracks DataFrames persisted during operator plan construction so
   * the harness mains (Bench/Verify) can release them after each query
@@ -55,7 +56,7 @@ object CacheRegistry {
     * per-batch release point. */
   def releaseSince(snap: Set[DataFrame], blocking: Boolean = false): Unit = synchronized {
     val (keep, drop) = tracked.partition(snap.contains)
-    drop.foreach(df => try df.unpersist(blocking) catch { case _: Throwable => () })
+    drop.foreach(df => try df.unpersist(blocking) catch { case NonFatal(_) => () })
     tracked.clear()
     tracked ++= keep
   }
@@ -66,7 +67,7 @@ object CacheRegistry {
     * can never overlap — and get charged to — the next query's timed
     * run. */
   def releaseAll(blocking: Boolean = false): Unit = synchronized {
-    tracked.foreach(df => try df.unpersist(blocking) catch { case _: Throwable => () })
+    tracked.foreach(df => try df.unpersist(blocking) catch { case NonFatal(_) => () })
     tracked.clear()
   }
 

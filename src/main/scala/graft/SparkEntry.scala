@@ -222,15 +222,10 @@ object SparkEntry {
       include = Some(Seq("words", "alpha_ratio", "punct_ratio", "stop_ratio")),
       labelField = "label")
     val modelPath = java.nio.file.Files.createTempDirectory("graft-mlfilter-model").toString
-    val assembled = FeatureVectorizer.assemble(feats, spec)
-    DecisionTree.trainAssembled(assembled, spec, modelPath, maxDepth = 6,
-      fitPartitions = FitParallelism)
+    DecisionTree.train(feats, spec, modelPath, maxDepth = 6, fitPartitions = FitParallelism)
     val reloaded = DecisionTree.load(s, modelPath)
     import graft.CacheRegistry.Cacheable
-    val scored = reloaded.setPredictionCol("score")
-      .transform(assembled)
-      .drop(FeatureVectorizer.FeaturesCol)
-      .cacheTracked
+    val scored = DecisionTree.predict(feats, reloaded, spec, "score").cacheTracked
     val agree = scored.agg(
       (avg(((col("score") >= 0.5) === (col("label") === 1.0)).cast("double")) >= 0.9)
         .as("agree_ok"))
@@ -416,20 +411,12 @@ object SparkEntry {
       include = Some(Seq("l_quantity", "l_discount", "l_tax")),
       labelField = "l_extendedprice")
     val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-model").toString
-    // One assembly pass: train and predict consume the SAME assembled
-    // frame (assembly is row-preserving; the trainer applies the
-    // null-label drop itself), instead of vectorizing 60k rows twice.
-    val assembled = FeatureVectorizer.assemble(li, spec)
-    DecisionTree.trainAssembled(assembled, spec, modelPath, maxDepth = 6,
-      fitPartitions = FitParallelism)
+    DecisionTree.train(li, spec, modelPath, maxDepth = 6, fitPartitions = FitParallelism)
     val reloaded = DecisionTree.load(s, modelPath)
     // cached: the fit aggregate and the output projection both consume
-    // the scored frame — without it assembly + tree transform run twice
+    // the scored frame — without it the scan and tree walk run twice
     import graft.CacheRegistry.Cacheable
-    val scored = reloaded.setPredictionCol("predicted_price")
-      .transform(assembled)
-      .drop(FeatureVectorizer.FeaturesCol)
-      .cacheTracked
+    val scored = DecisionTree.predict(li, reloaded, spec, "predicted_price").cacheTracked
     // one-row aggregate crossJoin: the documented scalar-attach shape.
     // 1e-9 relative slack: with zero-gain splits RMSE == stddev exactly
     // in math, and the two sides aggregate in different orders — strict

@@ -1,7 +1,8 @@
 package graft.ml
 
+import org.apache.spark.ml.attribute.NumericAttribute
 import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** Decision-tree regression train + predict, the Spark-ML (DataFrame)
@@ -14,7 +15,11 @@ import org.apache.spark.sql.functions._
   *    model persisted to a path;
   *  - predictor (/root/reference/.../SparkMLPredictor.java:125-157):
   *    loads the model, scores every record, appends the prediction as
-  *    a double column, preserving all input columns.
+  *    a double column, preserving all input columns. Scoring walks a
+  *    flattened copy of the tree in a codegen'd expression
+  *    ([[TreePredict]]) instead of MLlib's assemble-then-transform; a
+  *    null feature reads as 0.0 there, as its absent slot does in
+  *    MLlib, and predictions are bit-identical.
   *
   * Training is inherently a collect-to-driver-of-statistics operation;
   * Spark ML's tree learner aggregates split statistics distributed
@@ -29,22 +34,24 @@ object DecisionTree {
   private val Impurity = "variance"
 
   /** Drop null-label rows, assemble null-safe sparse features, fit,
-    * save. Returns the fitted model (also persisted at `modelPath`). */
+    * save. Returns the fitted model (also persisted at `modelPath`).
+    * `fitPartitions` as in [[trainAssembled]]. */
   def train(df: DataFrame, spec: FeatureSpec, modelPath: String,
-            maxDepth: Int = DefaultMaxDepth, maxBins: Int = DefaultMaxBins): DecisionTreeRegressionModel = {
+            maxDepth: Int = DefaultMaxDepth, maxBins: Int = DefaultMaxBins,
+            fitPartitions: Int = 0): DecisionTreeRegressionModel = {
     spec.validateLabel(df.schema)
     // Note: no .cache() on the assembled frame — the tree learner
     // immediately converts it to its own cached internal point RDD,
     // so a DataFrame-level persist only adds materialization cost
     // (measured +0.6 s at sf0.1).
     trainAssembled(FeatureVectorizer.assemble(
-      df.filter(col(spec.labelField).isNotNull), spec), spec, modelPath, maxDepth, maxBins)
+      df.filter(col(spec.labelField).isNotNull), spec), spec, modelPath, maxDepth, maxBins,
+      fitPartitions)
   }
 
-  /** Fit + save over an ALREADY-assembled frame — for callers that
-    * score the same rows right after training and want one assembly
-    * pass, not two (the null-label drop is applied here; assembly is
-    * row-preserving, so filtering before or after it is equivalent).
+  /** Fit + save over an ALREADY-assembled frame (the null-label drop
+    * is applied here; assembly is row-preserving, so filtering before
+    * or after it is equivalent).
     *
     * `fitPartitions` (0 = off) fans the fit input out when it arrives
     * with fewer partitions: MLlib's level-wise tree training runs one
@@ -80,17 +87,28 @@ object DecisionTree {
   }
 
   def load(spark: org.apache.spark.sql.SparkSession, modelPath: String): DecisionTreeRegressionModel =
-    DecisionTreeRegressionModel.load(modelPath)
+    DecisionTreeRegressionModel.read.session(spark).load(modelPath)
 
-  /** Score `df` with a fitted/loaded model: assemble the same feature
-    * layout, transform, append `predictionField` (double), drop the
-    * internal vector column. Map-only at any scale. */
-  def predict(df: DataFrame, model: DecisionTreeRegressionModel, spec: FeatureSpec,
+  /** Score `df` with a fitted/loaded model: the (sanitized) input
+    * columns plus `predictionField`, a double column carrying the
+    * metadata MLlib's `transform` gives it. The tree is flattened once
+    * per call ([[FlatTree]]) and walked per row by the codegen'd
+    * [[TreePredict]] expression over the spec's feature columns, so no
+    * vector is assembled and no model object ships with the tasks. A
+    * null feature reads as 0.0, as its absent sparse slot does in
+    * MLlib, and predictions equal `model.transform(assemble(df, spec))`
+    * bit for bit. `model` is never modified, so concurrent calls may
+    * share it. Map-only at any scale. */
+  def predict(df0: DataFrame, model: DecisionTreeRegressionModel, spec: FeatureSpec,
               predictionField: String): DataFrame = {
-    val prepared = FeatureVectorizer.assemble(df, spec)
-    model.setPredictionCol(predictionField)
-      .transform(prepared)
-      .drop(FeatureVectorizer.FeaturesCol)
+    val df = FeatureVectorizer.sanitizeColumns(df0)
+    val cols = spec.sanitized.featureColumns(df.schema)
+    require(cols.length == model.numFeatures,
+      s"The model was trained on ${model.numFeatures} features, but the spec selects " +
+        s"${cols.length}: ${cols.mkString(", ")}.")
+    val tree = TreePredict(FeatureVectorizer.doubles(cols), FlatTree(model.rootNode))
+    df.withColumn(predictionField, GraftColumnBridge.column(tree)
+      .as(predictionField, NumericAttribute.defaultAttr.toMetadata()))
   }
 
   /** Regression metrics for a scored frame — two distributed

@@ -1,8 +1,9 @@
 package graft.ml
 
 import org.apache.spark.ml.attribute.{AttributeGroup, NominalAttribute, NumericAttribute}
-import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
 /** Null-safe sparse feature assembly, the Spark-ML re-expression of
@@ -10,7 +11,11 @@ import org.apache.spark.sql.functions._
   * (/root/reference/src/main/java/co/cask/hydrator/plugin/
   * SparkMLTrainer.java:129-146): a null feature value contributes NO
   * entry to the (sparse) vector rather than being imputed — the
-  * vector size stays |features| and the index is simply absent.
+  * vector size stays |features| and the index is simply absent, so
+  * MLlib reads it as 0.0 (null feature = absent slot = 0.0). The
+  * vector is written natively by the codegen'd [[SparseAssemble]]
+  * expression, with no UDF and no boxing. Only training assembles;
+  * scoring walks the tree over the raw columns ([[TreePredict]]).
   *
   * Categorical features from the cardinality mapping are conveyed to
   * the tree learner the Spark-ML way: NominalAttribute metadata on
@@ -45,24 +50,15 @@ object FeatureVectorizer {
   }
 
   /** Adds `features` (sparse ml.linalg vector + ML attribute metadata)
-    * assembled from `spec.featureColumns` in schema order. Hyphenated
-    * input columns (and the spec's references to them) are sanitized
-    * to underscores first. */
+    * assembled from `spec.featureColumns` in schema order by the native
+    * [[SparseAssemble]] expression: slot i holds feature i cast to
+    * double, and a null feature leaves slot i absent (MLlib reads an
+    * absent slot as 0.0). Hyphenated input columns (and the spec's
+    * references to them) are sanitized to underscores first. */
   def assemble(df0: DataFrame, spec0: FeatureSpec): DataFrame = {
     val df = sanitizeColumns(df0)
     val spec = spec0.sanitized
     val cols = spec.featureColumns(df.schema)
-    val n = cols.length
-    val toVec = udf { xs: Array[java.lang.Double] =>
-      val idx = Array.newBuilder[Int]
-      val vals = Array.newBuilder[Double]
-      var i = 0
-      while (i < xs.length) {
-        if (xs(i) != null) { idx += i; vals += xs(i).doubleValue() }
-        i += 1
-      }
-      Vectors.sparse(n, idx.result(), vals.result()): Vector
-    }
     val attrs = cols.map { c =>
       spec.cardinality.get(c) match {
         case Some(card) => NominalAttribute.defaultAttr.withName(c).withNumValues(card)
@@ -72,8 +68,13 @@ object FeatureVectorizer {
     val meta = new AttributeGroup(FeaturesCol, attrs.toArray[org.apache.spark.ml.attribute.Attribute])
       .toMetadata()
     df.withColumn(FeaturesCol,
-      toVec(array(cols.map(c => col(c).cast("double")): _*)).as(FeaturesCol, meta))
+      GraftColumnBridge.column(SparseAssemble(doubles(cols))).as(FeaturesCol, meta))
   }
+
+  /** The feature columns as double expressions, the children of
+    * [[SparseAssemble]] and [[TreePredict]]. */
+  private[ml] def doubles(cols: Seq[String]): Seq[Expression] =
+    cols.map(c => GraftColumnBridge.expression(col(c).cast("double")))
 
   /** Number of populated (non-null-sourced) vector slots — exposed for
     * the `ml_feature_vectorize` oracle query. */

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.util.control.NonFatal
 
 /** Structured Streaming surface (SURVEY.md §2.6): the streaming twin
   * of the batch `q13_events_window` aggregation, plus stateful
@@ -135,7 +136,7 @@ object EventStream {
         try walk.iterator().asScala.toSeq.reverse
           .foreach(p => java.nio.file.Files.deleteIfExists(p))
         finally walk.close()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }))
   private def tempDirCleanedOnExit(prefix: String): String = {
     cleanupHook

@@ -1,6 +1,6 @@
 package graft.tools
 import graft.{SparkEntry, Tables}
-import graft.ml.{DecisionTree, FeatureSpec, FeatureVectorizer}
+import graft.ml.{DecisionTree, FeatureSpec}
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -22,10 +22,9 @@ object ProbeAgreement {
         include = Some(Seq("words", "alpha_ratio", "punct_ratio", "stop_ratio")),
         labelField = "label")
       val mp = java.nio.file.Files.createTempDirectory("probe").toString
-      val assembled = FeatureVectorizer.assemble(feats, spec)
-      DecisionTree.trainAssembled(assembled, spec, mp, maxDepth = 6,
+      DecisionTree.train(feats, spec, mp, maxDepth = 6,
         fitPartitions = math.max(8, spark.sparkContext.defaultParallelism / 4))
-      val scored = DecisionTree.load(spark, mp).setPredictionCol("score").transform(assembled)
+      val scored = DecisionTree.predict(feats, DecisionTree.load(spark, mp), spec, "score")
       val agree = scored.agg(
         avg(((col("score") >= 0.5) === (col("label") === 1.0)).cast("double"))).collect()(0).getDouble(0)
       println(f"[agree] $sf: $agree%.4f")

@@ -79,14 +79,128 @@ class DecisionTreeSpec extends SparkSpec {
 
   test("null feature values become absent sparse-vector slots, not zeros") {
     import spark.implicits._
-    val df = Seq((Some(1.0), 2.0), (None, 3.0)).toDF("a", "b")
+    val df = Seq[(Option[Double], Option[Double], Option[Int])](
+      (Some(1.0), Some(2.0), Some(7)), (None, Some(3.0), None), (Some(-0.0), None, Some(0)),
+      (None, None, None), (Some(Double.NaN), Some(5.0), Some(-2))).toDF("a", "b", "c")
     val out = FeatureVectorizer.assemble(df,
-      FeatureSpec(include = Some(Seq("a", "b")), labelField = "unused"))
+      FeatureSpec(include = Some(Seq("a", "b", "c")), labelField = "unused"))
       .select(FeatureVectorizer.FeaturesCol).collect()
-    val full = out(0).getAs[org.apache.spark.ml.linalg.Vector](0)
-    val sparse = out(1).getAs[org.apache.spark.ml.linalg.Vector](0)
-    assert(full.numActives == 2)
-    assert(sparse.numActives == 1 && sparse.size == 2)
+      .map(_.getAs[org.apache.spark.ml.linalg.SparseVector](0))
+    val expected = Seq(
+      (Array(0, 1, 2), Array(1.0, 2.0, 7.0)), (Array(1), Array(3.0)), (Array(0, 2), Array(-0.0, 0.0)),
+      (Array.empty[Int], Array.empty[Double]), (Array(0, 1, 2), Array(Double.NaN, 5.0, -2.0)))
+    assert(out.length == expected.length)
+    out.zip(expected).foreach { case (v, (idx, vals)) =>
+      assert(v.size == 3)
+      assert(v.indices.sameElements(idx), s"$v")
+      assert(v.values.map(java.lang.Double.doubleToRawLongBits)
+        .sameElements(vals.map(java.lang.Double.doubleToRawLongBits)), s"$v")
+    }
+  }
+
+  /** A flight-shaped training frame generated in place: the flight
+    * spec's features, dofW in 0..6, and a label that depends on dofW
+    * through several category groups, so the fitted tree carries
+    * categorical splits on both sides of `isLeft`. */
+  private def syntheticFlights(rows: Int): DataFrame = {
+    def h(salt: Int, mod: Int) = pmod(xxhash64(col("id"), lit(salt)), lit(mod.toLong))
+    spark.range(rows).select(
+      h(1, 28).cast("int").as("dofM"), h(2, 7).cast("int").as("dofW"),
+      h(3, 5).cast("double").as("carrier"), (h(4, 40) + 10000).cast("int").as("originId"),
+      (h(5, 40) + 10000).cast("int").as("destId"), h(6, 2400).cast("double").as("scheduleDepTime"),
+      h(7, 2400).cast("double").as("scheduledArrTime"), h(8, 400).cast("double").as("elapsedTime"),
+      h(9, 10).as("noise"))
+      .withColumn("delayed",
+        when(col("noise") < 1, 1.0)
+          .when(col("dofW").isin(1, 3) && col("scheduleDepTime") > 1200, 1.0)
+          .when(col("dofW").isin(0, 5, 6) && col("elapsedTime") > 250, 1.0)
+          .when(col("dofW") === 4 && col("carrier") >= 2, 1.0)
+          .otherwise(0.0))
+      .drop("noise")
+  }
+
+  /** Scoring rows with null features, NaN and values outside dofW's
+    * 0..6 range (dofW read as double so NaN and 2.5 are possible). */
+  private def edgeRows(rows: Int): DataFrame = {
+    val dofW = col("dofW").cast("double")
+    val k = col("id") % 12
+    val nullD = lit(null).cast("double")
+    syntheticFlights(rows).withColumn("id", monotonically_increasing_id())
+      .withColumn("k", k)
+      .withColumn("dofW",
+        when(k === 0, lit(9.0)).when(k === 1, lit(Double.NaN)).when(k === 2, nullD)
+          .when(k === 3, lit(-1.0)).when(k === 4, lit(2.5)).when(k === 8, lit(-0.0))
+          .otherwise(dofW))
+      .withColumn("carrier", when(k === 5, nullD).otherwise(col("carrier")))
+      .withColumn("scheduleDepTime",
+        when(k === 6, lit(Double.NaN)).when(k === 7, nullD).otherwise(col("scheduleDepTime")))
+      .withColumn("elapsedTime", when(k === 7, nullD).otherwise(col("elapsedTime")))
+      .drop("k", "delayed")
+  }
+
+  test("predict equals MLlib transform on nulls, NaN and out-of-range categories") {
+    import org.apache.spark.ml.param.ParamMap
+    import org.apache.spark.ml.tree.{CategoricalSplit, InternalNode, Node}
+    val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-edge").toString
+    DecisionTree.train(syntheticFlights(4000), trainSpec, modelPath, maxDepth = 9, maxBins = 100)
+    val model = DecisionTree.load(spark, modelPath)
+    def catSplits(n: Node): Seq[CategoricalSplit] = n match {
+      case i: InternalNode =>
+        (i.split match { case c: CategoricalSplit => Seq(c); case _ => Nil }) ++
+          catSplits(i.leftChild) ++ catSplits(i.rightChild)
+      case _ => Nil
+    }
+    val sides = catSplits(model.rootNode).map(c => c.leftCategories.length <= c.numCategories / 2)
+    assert(sides.contains(true) && sides.contains(false), s"categorical split sides: $sides")
+
+    val toScore = edgeRows(1200)
+    val spec = trainSpec.copy(labelField = "unused")
+    val reference = model.copy(ParamMap.empty).setPredictionCol("p")
+      .transform(FeatureVectorizer.assemble(toScore, spec))
+      .drop(FeatureVectorizer.FeaturesCol)
+    def check(): Unit = {
+      val got = DecisionTree.predict(toScore, model, spec, "p")
+      assert(got.schema == reference.schema)
+      val g = got.orderBy("id").collect()
+      val r = reference.orderBy("id").collect()
+      assert(g.length == 1200 && g.length == r.length)
+      def bits(row: org.apache.spark.sql.Row) = row.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case o => o
+      }
+      g.zip(r).foreach { case (a, b) => assert(bits(a) == bits(b), s"row $a vs $b") }
+    }
+    check()
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(check())
+  }
+
+  test("predict leaves the model unchanged and concurrent calls keep their own columns") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-shared").toString
+    DecisionTree.train(syntheticFlights(2000), trainSpec, modelPath, maxDepth = 5)
+    val model = DecisionTree.load(spark, modelPath)
+    val spec = trainSpec.copy(labelField = "unused")
+    val toScore = syntheticFlights(500).drop("delayed")
+    val before = model.getPredictionCol
+    val p1 = DecisionTree.predict(toScore, model, spec, "p1")
+    assert(model.getPredictionCol == before)
+    val expected = p1.select("p1").collect().map(_.getDouble(0)).sorted.toSeq
+
+    val fields = Seq("pa", "pb", "pc", "pd")
+    val runs = fields.map { f =>
+      Future {
+        val out = DecisionTree.predict(toScore, model, spec, f)
+        (f, out.columns.toSeq, out.select(f).collect().map(_.getDouble(0)).sorted.toSeq)
+      }
+    }
+    runs.map(Await.result(_, 5.minutes)).foreach { case (f, columns, values) =>
+      assert(columns.contains(f) && fields.filterNot(_ == f).forall(o => !columns.contains(o)))
+      assert(values == expected, s"field $f")
+    }
+    assert(model.getPredictionCol == before)
   }
 
   test("validation error messages mirror the reference") {
