@@ -1,10 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // warm (default): operators persist multi-consumer subtrees, the
     // timed pair measures the resident steady state — but per-query
     // bytes then depend on whether the warm run's cache SURVIVED into
@@ -18,29 +16,7 @@ object Bench {
       s"SPARK_GRAFT_BENCH_CACHE must be warm|cold, got $cacheMode")
     CacheRegistry.disabled = cacheMode == "cold"
     val baselineFile = if (cacheMode == "cold") "bench_cold_out.json" else "bench_out.json"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Stability, not speed (guide §1.2 step 3): the r19 8-core
-      // driver leg DIED mid-run — 60 consecutive failed executor
-      // heartbeats (~10 min of co-tenant driver starvation at the
-      // default 10 s interval) made the in-process executor self-exit
-      // and stop the context, losing the whole scaling measurement
-      // (BENCH_r19_c8 rc=1, parsed null). Heartbeats are background
-      // bookkeeping — in local mode executor and driver share a JVM,
-      // so a missed beat never signals a lost node, only a stalled
-      // host window. Widen the tolerance so a multi-minute stall
-      // inflates a timing (which min-of-2 + drift flags already
-      // handle) instead of killing the process.
-      .config("spark.executor.heartbeatInterval", "20s")
-      .config("spark.executor.heartbeat.maxFailures", "240")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // The warm/timed pair below re-persists structurally identical
     // subtrees by design (the timed run reuses the warm run's cache —
     // that IS the steady state being measured); CacheManager's

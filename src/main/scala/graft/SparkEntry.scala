@@ -207,8 +207,8 @@ object SparkEntry {
     * `agree_ok` flag asserted TRUE by the oracle: the tree must
     * reproduce its own training rule on ≥ 90% of documents — a
     * persisted-model corruption or feature mismatch collapses
-    * agreement to chance. Measured agreement is 1.0 at all three SF
-    * dirs (tools.ProbeAgreement) — the 0.9 bound is slack for
+    * agreement to chance. Agreement measured 1.0 at all three SF dirs
+    * in round 4 — the 0.9 bound is slack for
     * adversarial boundary data, not a working margin. Exact tree
     * semantics stay pinned by the flight-delay spec; per-language
     * kept/dropped stats invariants are spec-checked

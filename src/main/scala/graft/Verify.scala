@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -10,25 +9,7 @@ object Verify {
     // dev-only query-name subset for fast single-query iteration.
     val Array(sfDir, outDir, rest @ _*) = args
     val subset = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Same stall tolerance as Bench (see its builder for the full
-      // rationale): in local mode a missed executor heartbeat is a
-      // stalled host window, never a lost node — the r19 driver lost
-      // an entire bench leg to 60 consecutive misses during a ~10-min
-      // co-tenant stall. A killed Verify would zero the round's
-      // correctness artifact the same way.
-      .config("spark.executor.heartbeatInterval", "20s")
-      .config("spark.executor.heartbeat.maxFailures", "240")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }

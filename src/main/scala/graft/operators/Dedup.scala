@@ -35,7 +35,6 @@ object Dedup {
   /** Distinct character n-gram shingles of the lowercased text, hashed
     * to 64-bit longs — pure expression (sequence + transform +
     * substring), stays in codegen. */
-  def shingleExprPublic(n: Int): String = shingleExpr(n)
   private[operators] def shingleExpr(n: Int): String =
     s"array_distinct(transform(sequence(1, greatest(length(text) - ${n - 1}, 1)), i -> xxhash64(substring(lower(text), i, $n))))"
 
@@ -1070,10 +1069,11 @@ object Dedup {
     * gram stream ON TOP of the count's pruned shuffle. The forced
     * shape repartitions the scan on g ONCE and both consumers reuse
     * the exchange (ReusedExchange — one fat shuffle total, plan-
-    * asserted in PlanSpec). Threshold calibrated from the ProfileSpan
-    * crossover measurement (README): at 50k docs / 10× duplication
-    * the broadcast shape still wins, so the switch sits well above
-    * every testable scale and exists for the cluster regime. */
+    * asserted in PlanSpec). Threshold calibrated from round 15's
+    * crossover measurement on the 10× replica: at 50k docs / 10×
+    * duplication the broadcast shape still wins, so the switch sits
+    * well above every testable scale and exists for the cluster
+    * regime. */
   val SpanBroadcastDocLimit: Long = 2000000L
 
   /** Shared candidate→confirmed hit derivation for the span-cut
@@ -1345,7 +1345,7 @@ object Dedup {
     // 2-struct array), not a self-union: hits sits on top of the
     // per-window sort exchange, and the union form re-read that
     // exchange and re-ran the window for each branch — stage-profiled
-    // on the 10× replica (ProfileKeepFirstStages) as a 956 MB read of
+    // on the 10× replica in round 18 as a 956 MB read of
     // a 478 MB exchange, the single biggest keep-first premium over
     // remove-all
     val ev = hits.select(col("doc_id"), explode(array(
@@ -1636,8 +1636,7 @@ object Dedup {
     * the shipped 4.1.2 ParquetFilters.makeInPredicate, and measured —
     * toggling the threshold changed nothing, only disabling
     * `spark.sql.parquet.filterPushdown` ablates the skip). Measured
-    * in the ProbeRowGroupSkip harness: 3× wall on a decode-bound
-    * many-row-group build. */
+    * in round 18: 3× wall on a decode-bound many-row-group build. */
   private[graft] val SpanProbeInlineGramMax = 1024
 
   /** The index scan for a probe with the given DISTINCT gram frame

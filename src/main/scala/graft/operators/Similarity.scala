@@ -905,8 +905,8 @@ object Similarity {
     * (0.78 → 0.45 → 0.00 at n=500/2000/20000), so at-scale serving
     * quality claims must be measured over THIS artifact, not the
     * fixed-T harness graph. Built once per dir × k on first touch;
-    * consumed by [[graphServeRecallRow]] and the ProfileGraphServe
-    * converged mode. */
+    * consumed by [[graphServeRecallRow]]; round 14's serving-quality
+    * matrix was measured over it. */
   private[graft] def knnGraphTableBaseConverged(s: SparkSession, dir: String,
                                                 k: Int = 10): String = {
     val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+|_+$", "")
@@ -916,25 +916,6 @@ object Similarity {
       graft.sources.Sources.clearOrphanedLocation(s, table)
       knnDescentConverged(s,
         Tables.embeddings(s, dir).filter(col("vec_id") % 10 =!= 0), k)
-        .write.format("parquet").saveAsTable(table)
-    }
-    table
-  }
-
-  /** [[knnGraphTableBaseConverged]]'s FULL-corpus twin — the
-    * converged graph over every vector, persisted once per dir × k.
-    * The member-query serving measurement walks THIS artifact
-    * (re-querying an indexed corpus, the bulk-serving shape behind
-    * the q/s volume rows); the base-only table serves the held-out
-    * shape. */
-  private[graft] def knnGraphTableConverged(s: SparkSession, dir: String,
-                                            k: Int = 10): String = {
-    val slug = dir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+|_+$", "")
-    val dirTag = (scala.util.hashing.MurmurHash3.stringHash(dir) & 0x7fffffff).toHexString
-    val table = s"graft_knn_graph_conv_${slug}_${dirTag}_k${k}_v1"
-    if (!s.catalog.tableExists(table)) {
-      graft.sources.Sources.clearOrphanedLocation(s, table)
-      simKnnGraphConverged(s, dir, k)
         .write.format("parquet").saveAsTable(table)
     }
     table
@@ -1833,7 +1814,7 @@ object Similarity {
     * measures 0.98 recall on the 218-member sf0.01 en-segment decays
     * to 0.72–0.76 on the 808-member sf0.1 segment over the same
     * NN-Descent (k=10, 3-iter) graph family; the measured recovery
-    * frontier (ProbeSegmentRecall, 200 query-neighbor pairs) is
+    * frontier (round 18, 200 query-neighbor pairs) is
     * beam 48 → 0.945, beam 64 → 0.98 at n=808, i.e. ~linear in n at
     * THIS graph density — so the rule is n/12 with the old default as
     * the floor (218 → 20 unchanged, 808 → 68). Linear beam growth is
@@ -2665,8 +2646,8 @@ object Similarity {
     * reconstruction (256 centroids per 8-dim subspace, codebook
     * trained on the sf0.01 sample) needs a far wider over-fetch than
     * SQ8's 4×: on fully UNSEEN vectors (sf0.1, none in the training
-    * sample) the measured equality threshold is rerank = 24
-    * ([[graft.tools.ProbePqMargin]]); the default 32 carries margin
+    * sample) the equality threshold measured in round 9 is
+    * rerank = 24; the default 32 carries margin
     * for corpus regeneration. After the exact re-rank the output
     * recovers [[simIvfAnn]]'s bit-for-bit, so this SHARES its DuckDB
     * oracle; pre-rerank recall is additionally asserted in

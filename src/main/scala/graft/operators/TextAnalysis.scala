@@ -617,7 +617,7 @@ object TextAnalysis {
       .select(col("doc_id"),
         explode(expr("filter(split(lower(text), '\\\\s+'), t -> t != '')")).as("t"))
       .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
-    // docTok is NOT cached: profiled (tools.ProfileLm, sf0.1) the
+    // docTok is NOT cached: profiled in round 5 (sf0.1), the
     // string-keyed cache costs more than the two rebuilds it saves
     // (1.31 s cached vs 1.03 s rebuilt). The corpus is scanned twice
     // (freqs, join); the grand total derives from the vocab-sized

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-round SERVING-HEALTH + STREAMING-THROUGHPUT dashboard — one
@@ -41,16 +40,7 @@ object Dashboard {
     val oracleSf = positional.lift(1).getOrElse("/root/testdata/sf0.01")
     val benchSf = positional.lift(2).getOrElse("/root/testdata/sf0.1")
     val servingOnly = args.contains("--serving-only")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import graft.operators.Similarity
     val lang = "en"
     // sfDir values are interpolated into the artifact — escape rather
@@ -89,7 +79,7 @@ object Dashboard {
       // flag): scaled beam past 2× the canary = rebuild-the-graph
       // signal. When it fires, record the REBUILD EVIDENCE row too —
       // the denser graphK=20 segment graph served at the halved
-      // size-aware walk (r18 ProbeSegmentRecall: 0.99 at beam 32 on
+      // size-aware walk (measured in r18: 0.99 at beam 32 on
       // the n=808 segment the k=10 graph needs beam 64 for), so every
       // round's artifact carries the measured escape, not just the
       // alarm.

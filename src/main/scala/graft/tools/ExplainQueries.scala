@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Writes `plans/<tag>/<query>_<suffix>.txt` — `.explain("formatted")`
@@ -16,16 +15,7 @@ object ExplainQueries {
     require(args.length >= 3, "usage: ExplainQueries <tag> <suffix> <query>...")
     val tag = args(0); val suffix = args(1); val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     Files.createDirectories(Paths.get(s"plans/$tag"))
     names.foreach { name =>
       // FIRST invocation: warmup, exactly like Bench — builds any

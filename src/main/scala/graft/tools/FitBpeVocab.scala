@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Offline BPE vocabulary fit (Sennrich et al. 2016, "Neural Machine
@@ -22,11 +21,7 @@ object FitBpeVocab {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nMerges = args.lift(1).map(_.toInt).getOrElse(96)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(8)
 
     // word-frequency dict: the only thing BPE fitting ever needs
     val wordFreq: Map[String, Long] = graft.Tables.documents(spark, src)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Offline trainer for the frozen PRODUCT-QUANTIZER codebooks (dev
@@ -24,11 +23,7 @@ object FitPqCodebook {
     val out = args.headOption.getOrElse("src/main/scala/graft/operators/PqCodebook.scala")
     val m = 8      // subspaces
     val k = 256    // centroids per subspace (full byte codes, the standard PQ shape)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val e = Tables.embeddings(spark, dir)

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic generator of ADVERSARIAL quality-gate negatives —
@@ -98,11 +98,7 @@ object FitQualityWeights {
   def main(args: Array[String]): Unit = {
     val trainDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = args.headOption.getOrElse("src/main/scala/graft/operators/QualityWeights.scala")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     val d = TextAnalysis.ClassifierDim
 
     def featRows(docs: DataFrame): Array[(Array[Int], Boolean)] =

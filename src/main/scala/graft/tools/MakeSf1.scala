@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes an "sf1-like" dataset for SCALING MEASUREMENT ONLY
@@ -20,11 +20,7 @@ object MakeSf1 {
     val src = "/root/testdata/sf0.1"
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val reps = 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     def replicate(table: String, shifts: Map[String, Long], mutate: (DataFrame, Int) => DataFrame = (d, _) => d): Unit = {
       val base = spark.read.parquet(s"$src/$table.parquet")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Synthesizes a NATURAL-GROWTH "sf1-like" corpus (dev tool,
@@ -46,11 +46,7 @@ object MakeSf1Natural {
     val replica = "/tmp/graft_sf1"
     val out = args.headOption.getOrElse("/tmp/graft_sf1n")
     val factor = 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     // ---- documents: fit the three empirical distributions ----

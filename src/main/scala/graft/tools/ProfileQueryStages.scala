@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Generic wall-time attribution for any registry query (dev tool,
   * round-19 optimization pass): runs the named queries through the
@@ -17,16 +17,7 @@ object ProfileQueryStages {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileQueryStages <query> [query ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
@@ -98,7 +89,7 @@ object ProfileQueryStages {
         val sc = spark.sparkContext
         val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
         bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Throwable => Thread.sleep(800) }
+      } catch { case NonFatal(_) => Thread.sleep(800) }
     args.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       def runOnce(): Double = {

@@ -56,20 +56,12 @@ object StreamThroughput {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("dedup")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.GraftSession.local()
     // transformWithState requires the RocksDB provider (multi-column-
     // family state); the default HDFS-backed provider can't host it.
     if (mode == "stats")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val fpt = sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TRIGGER", "2").toInt

@@ -736,8 +736,8 @@ class DedupSimilaritySpec extends SparkSpec {
     val rFixed = (exact & fixedEdges).size.toDouble / exact.size
     info(f"converged recall $rConv%.3f vs fixed-T harness $rFixed%.3f")
     // running to convergence with LSH-seeded init must never lose to
-    // the fixed-T contract harness (at 10x the gap is 0.96-vs-0.00 on
-    // the replica — tools.IvfRecallEval's measured rows)
+    // the fixed-T contract harness (at 10x the gap measured 0.96 vs
+    // 0.00 on the replica in round 11)
     assert(rConv >= rFixed,
       f"converged form ($rConv%.3f) below the fixed-T harness ($rFixed%.3f)")
     CacheRegistry.releaseAll()

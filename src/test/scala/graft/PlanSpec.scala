@@ -258,17 +258,19 @@ class PlanSpec extends SparkSpec {
   }
 
   test("span-family dir entry points thread the broadcast gate: below the doc limit the probe broadcasts, no forced gram exchange") {
-    // r20: pipeSpanIngest and the multibyte twins previously called the
-    // span cores with the DEFAULT forceGramShuffle=false — an
-    // unconditional broadcast(rep) regardless of corpus size, which
-    // past the 8 GB broadcast cap fails the job outright at cluster
-    // scale. They now thread rowCount > SpanBroadcastDocLimit like
-    // pipeSpanDedup; this pins the below-limit side (gate false at
-    // test scale → broadcast probe, no forced repartition), so an
-    // inverted gate would fail here, and the forced branch itself is
-    // covered by the past-broadcast fallback test above.
+    // r20: pipeSpanIngest, pipeFullIngest and the multibyte twins
+    // previously called the span cores with the DEFAULT
+    // forceGramShuffle=false — an unconditional broadcast(rep)
+    // regardless of corpus size, which past the 8 GB broadcast cap
+    // fails the job outright at cluster scale. They now thread
+    // rowCount > SpanBroadcastDocLimit like pipeSpanDedup; this pins
+    // the below-limit side (gate false at test scale → broadcast
+    // probe, no forced repartition), so an inverted gate would fail
+    // here, and the forced branch itself is covered by the
+    // past-broadcast fallback test above.
     for ((name, df) <- Seq(
         "pipe_span_ingest" -> TextAnalysis.pipeSpanIngest(spark, Sf),
+        "pipe_full_ingest" -> TextAnalysis.pipeFullIngest(spark, Sf),
         "pipe_span_dedup_multibyte" ->
           graft.operators.Dedup.pipeSpanDedupMultibyte(spark, Sf),
         "pipe_span_keep_first_multibyte" ->
@@ -411,7 +413,7 @@ class PlanSpec extends SparkSpec {
       // micro-probe row-group pushdown: the 11-gram set is inlined as
       // a pushed IN(g, ...) on the scan, which the (pb, g) file sort
       // turns into row-group min/max skipping inside the surviving
-      // partitions (bytes measured in ProfileSpanIndex's leg 4; here
+      // partitions (bytes measured in round 18; here
       // the plan contract — the filter must reach PushedFilters, not
       // just the post-scan Filter node)
       val pushed = scans.map(_.metadata.getOrElse("PushedFilters", "")).mkString
