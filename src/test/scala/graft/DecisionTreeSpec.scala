@@ -23,10 +23,12 @@ class DecisionTreeSpec extends SparkSpec {
     StructField("distance", IntegerType)))
 
   /** Training frame mirroring the reference test's getInputData:
-    * dofM/dofW shifted to 0-based, delayed = depDelayMins > 40. */
+    * dofM/dofW shifted to 0-based, delayed = depDelayMins > 40. Read
+    * from [[FlightCsv]]: the reference's CSV where present, else a
+    * generated one in its layout. */
   private lazy val flights: DataFrame =
     spark.read.schema(csvSchema)
-      .csv("/root/reference/src/test/resources/trainData.csv")
+      .csv(FlightCsv.path(spark))
       .withColumn("dofM", col("dofM") - 1)
       .withColumn("dofW", col("dofW") - 1)
       .withColumn("delayed", when(col("depDelayMins") > 40, 1.0).otherwise(0.0))
@@ -40,6 +42,7 @@ class DecisionTreeSpec extends SparkSpec {
     cardinality = FeatureSpec.parseCardinality("dofW:7"))
 
   test("flight-delay train + predict reproduces the reference's labels") {
+    assume(FlightCsv.referencePresent, s"reference CSV absent: ${FlightCsv.Reference}")
     val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-flight").toString
     DecisionTree.train(flights, trainSpec, modelPath, maxDepth = 9, maxBins = 100)
     val model = DecisionTree.load(spark, modelPath)
@@ -236,9 +239,15 @@ class DecisionTreeSpec extends SparkSpec {
   test("invalid cardinality mapping fails the training run") {
     val badSpec = trainSpec.copy(cardinality = Map("dofW" -> 2))
     val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-bad").toString
-    intercept[Exception] {
+    val e = intercept[Exception] {
       DecisionTree.train(flights, badSpec, modelPath, maxDepth = 9)
     }
+    // MLlib rejects dofW values outside the declared 0..1 categories
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toList
+    assert(causes.exists {
+      case c: IllegalArgumentException => c.getMessage.contains("is categorical with values in")
+      case _ => false
+    }, s"cause chain: ${causes.mkString(" <- ")}")
   }
 
   test("hyphenated field names sanitize to underscores") {

@@ -1,0 +1,53 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+
+/** The flight-delay training CSV the reference plugin's tests read
+  * (headerless, 17 columns in the reference's `trainData.csv` layout).
+  * Where the reference checkout is present its own file is used;
+  * otherwise a deterministic flight-shaped CSV in the same layout is
+  * generated once per JVM under a temp dir, so the specs that use the
+  * file only as a frame still run. The generated rows carry none of
+  * the reference's flights: checks of the reference's exact labels
+  * must `assume(referencePresent)`. */
+object FlightCsv {
+  val Reference: Path = Paths.get("/root/reference/src/test/resources/trainData.csv")
+
+  def referencePresent: Boolean = Files.exists(Reference)
+
+  private val Rows = 5000
+
+  private var generated: Option[String] = None
+
+  /** The reference CSV when present, else the generated one's dir. */
+  def path(spark: SparkSession): String = synchronized {
+    if (referencePresent) Reference.toString
+    else generated.getOrElse {
+      val dir = Files.createTempDirectory("graft-flights").resolve("trainData").toString
+      write(spark, dir)
+      generated = Some(dir)
+      dir
+    }
+  }
+
+  /** dofM in 1..31, dofW in 1..7, `N`-prefixed tail numbers, a
+    * flightNum with multiples of 7, and depDelayMins in -10..109 (both
+    * sides of the spec's 40-minute `delayed` cut). */
+  private def write(spark: SparkSession, dir: String): Unit = {
+    def h(salt: Int, mod: Int) = pmod(xxhash64(col("id"), lit(salt)), lit(mod.toLong))
+    spark.range(Rows).select(
+      (h(1, 31) + 1).cast("int").as("dofM"), (h(2, 7) + 1).cast("int").as("dofW"),
+      (h(3, 5) + 1).cast("double").as("carrier"), format_string("N%03dAA", h(4, 1000)).as("tailNum"),
+      (h(5, 2000) + 1).cast("int").as("flightNum"), (h(6, 40) + 10000).cast("int").as("originId"),
+      format_string("A%02d", h(6, 40)).as("origin"), (h(7, 40) + 10000).cast("int").as("destId"),
+      format_string("A%02d", h(7, 40)).as("dest"), h(8, 2400).cast("double").as("scheduleDepTime"),
+      h(9, 2400).cast("double").as("deptime"), (h(10, 120) - 10).cast("double").as("depDelayMins"),
+      h(11, 2400).cast("double").as("scheduledArrTime"), h(12, 2400).cast("double").as("arrTime"),
+      (h(13, 120) - 10).cast("double").as("arrDelay"), (h(14, 400) + 20).cast("double").as("elapsedTime"),
+      (h(15, 3000) + 50).cast("int").as("distance"))
+      .coalesce(1).write.csv(dir)
+  }
+}

@@ -11,7 +11,7 @@ class SourcesSpec extends SparkSpec {
       StructField("dofM", IntegerType), StructField("dofW", IntegerType),
       StructField("carrier", DoubleType), StructField("tailNum", StringType)))
     // only the first 4 columns bind; the rest of each line is ignored
-    val df = Sources.csv(spark, "/root/reference/src/test/resources/trainData.csv", schema)
+    val df = Sources.csv(spark, FlightCsv.path(spark), schema)
     assert(df.count() > 100)
     assert(df.filter(col("tailNum").startsWith("N")).count() == df.count())
   }
