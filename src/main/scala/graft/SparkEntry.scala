@@ -221,9 +221,7 @@ object SparkEntry {
     val spec = FeatureSpec(
       include = Some(Seq("words", "alpha_ratio", "punct_ratio", "stop_ratio")),
       labelField = "label")
-    val modelPath = java.nio.file.Files.createTempDirectory("graft-mlfilter-model").toString
-    DecisionTree.train(feats, spec, modelPath, maxDepth = 6, fitPartitions = FitParallelism)
-    val reloaded = DecisionTree.load(s, modelPath)
+    val reloaded = trainReloaded(s, feats, spec, "graft-mlfilter-model")
     import graft.CacheRegistry.Cacheable
     val scored = DecisionTree.predict(feats, reloaded, spec, "score").cacheTracked
     val agree = scored.agg(
@@ -379,16 +377,18 @@ object SparkEntry {
        |  sum(CASE WHEN q AND NOT exact_dup AND NOT near_dup THEN 1 ELSE 0 END)::BIGINT AS n_ingest
        |FROM gated GROUP BY lang ORDER BY lang""".stripMargin
 
-  /** Fit-input fan-out for the invariant-checked ML queries: enough
-    * to keep the per-level tree aggregates off a single task without
-    * paying 32 tiny-task overheads on a 600k-row input. A FIXED
-    * constant, not derived from defaultParallelism: repartitioning
-    * changes the learned tree (per DecisionTree.trainAssembled's doc),
-    * so a host-dependent value would make the appended predictions
-    * vary with core count. Pinning it keeps the scored column
-    * machine-independent while the exact-prediction flight spec keeps
-    * using the fitPartitions=0 default. */
-  private val FitParallelism: Int = 8
+  /** The reference's persist → reload round trip at depth 6: train on
+    * `df`, save under a fresh temp dir named with `prefix`, load, then
+    * delete the dir. `DecisionTree.load` reads the whole model, so
+    * nothing reads the dir after it. */
+  private def trainReloaded(s: SparkSession, df: DataFrame, spec: FeatureSpec,
+                            prefix: String): org.apache.spark.ml.regression.DecisionTreeRegressionModel = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try {
+      DecisionTree.train(df, spec, dir.toString, maxDepth = 6)
+      DecisionTree.load(s, dir.toString)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 
   /** Reference end-to-end: train decision-tree regression on lineitem
     * (label l_extendedprice), persist, reload, score, append the
@@ -410,9 +410,7 @@ object SparkEntry {
     val spec = FeatureSpec(
       include = Some(Seq("l_quantity", "l_discount", "l_tax")),
       labelField = "l_extendedprice")
-    val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-model").toString
-    DecisionTree.train(li, spec, modelPath, maxDepth = 6, fitPartitions = FitParallelism)
-    val reloaded = DecisionTree.load(s, modelPath)
+    val reloaded = trainReloaded(s, li, spec, "graft-dt-model")
     // cached: the fit aggregate and the output projection both consume
     // the scored frame — without it the scan and tree walk run twice
     import graft.CacheRegistry.Cacheable

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.ml.attribute.NumericAttribute
 import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
+import org.apache.spark.ml.tree.impl.GraftTreeBridge
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
@@ -21,11 +22,15 @@ import org.apache.spark.sql.functions._
   *    null feature reads as 0.0 there, as its absent slot does in
   *    MLlib, and predictions are bit-identical.
   *
-  * Training is inherently a collect-to-driver-of-statistics operation;
-  * Spark ML's tree learner aggregates split statistics distributed
-  * (map-side partial aggregation over instances), so it scales with
-  * rows — at 100 TB the caveat is maxBins × features × nodes driver
-  * memory, not data size.
+  * Training has two branches ([[trainAssembled]]). Both start with
+  * MLlib's own metadata and split candidates. The rows are then
+  * reduced in one distributed aggregate to (count, Σy, Σy²) per
+  * distinct bin tuple, a "cell"; cells ≤ min(rows, ∏ bins per
+  * feature). Within `spark.graft.ml.treeMaxCells` the tree is grown on
+  * the driver from the cells, which cost memory per cell, not per row.
+  * Past it (at 100 TB with several continuous features, say) MLlib's
+  * level-wise fit runs as is: one distributed pass per level, its
+  * driver memory maxBins × features × nodes per level, not data size.
   */
 object DecisionTree {
 
@@ -34,45 +39,51 @@ object DecisionTree {
   private val Impurity = "variance"
 
   /** Drop null-label rows, assemble null-safe sparse features, fit,
-    * save. Returns the fitted model (also persisted at `modelPath`).
-    * `fitPartitions` as in [[trainAssembled]]. */
+    * save. Returns the fitted model (also persisted at `modelPath`). */
   def train(df: DataFrame, spec: FeatureSpec, modelPath: String,
-            maxDepth: Int = DefaultMaxDepth, maxBins: Int = DefaultMaxBins,
-            fitPartitions: Int = 0): DecisionTreeRegressionModel = {
+            maxDepth: Int = DefaultMaxDepth, maxBins: Int = DefaultMaxBins): DecisionTreeRegressionModel = {
     spec.validateLabel(df.schema)
-    // Note: no .cache() on the assembled frame — the tree learner
-    // immediately converts it to its own cached internal point RDD,
-    // so a DataFrame-level persist only adds materialization cost
-    // (measured +0.6 s at sf0.1).
+    // Note: no .cache() on the assembled frame: the fit reads it in
+    // four jobs (MLlib's first row, count and split sample, then the
+    // cell aggregate), and a DataFrame-level persist added
+    // materialization cost (measured +0.6 s at sf0.1 under MLlib's
+    // level-wise fit, which caches its own binned points).
     trainAssembled(FeatureVectorizer.assemble(
-      df.filter(col(spec.labelField).isNotNull), spec), spec, modelPath, maxDepth, maxBins,
-      fitPartitions)
+      df.filter(col(spec.labelField).isNotNull), spec), spec, modelPath, maxDepth, maxBins)
   }
+
+  /** Session conf: the most bin-tuple cells the one-scan fit grows on
+    * the driver; a fit input with more runs MLlib's level-wise fit. */
+  val MaxCellsConf = "spark.graft.ml.treeMaxCells"
+
+  /** 2^18 cells. A [[Cells]] table spends 64 to 128 B per cell at 8
+    * features (32 B of bin indices and 24 B of stats in arrays grown by
+    * doubling, 8 to 16 B of hash slots), so at most about 34 MB on the
+    * driver and in each aggregating task; the driver grows the tree
+    * over them in one walk per level, well under a second. */
+  private val DefaultMaxCells: Int = 1 << 18
 
   /** Fit + save over an ALREADY-assembled frame (the null-label drop
     * is applied here; assembly is row-preserving, so filtering before
     * or after it is equivalent).
     *
-    * `fitPartitions` (0 = off) fans the fit input out when it arrives
-    * with fewer partitions: MLlib's level-wise tree training runs one
-    * treeAggregate pass per level, so an under-partitioned input (a
-    * single parquet split) serializes every pass on one task —
-    * measured 2× on 600k rows arriving as one file, shuffle included.
-    * Opt-in, because repartitioning changes the split-candidate
-    * sample and thus (slightly) the learned tree: callers that pin
-    * exact reference predictions (the flight spec) leave it off; the
-    * invariant-checked pipeline queries turn it on. A cluster-scale
-    * input already carries enough partitions and is left untouched
-    * either way. */
+    * The fit takes MLlib's own metadata and split candidates for the
+    * input (the jobs `DecisionTreeRegressor.fit` starts with, with its
+    * seed 42), bins the rows as MLlib does, and reduces them in ONE
+    * aggregate job to (count, Σy, Σy²) per distinct bin tuple ("cell").
+    * A variance-impurity tree needs nothing else from its rows, so when
+    * there are at most `spark.graft.ml.treeMaxCells` cells the tree is
+    * grown on the driver from them ([[CellTree]]), with MLlib's splits,
+    * gain rule, tie order and pruning, instead of MLlib's one pass over
+    * every row per level. Past the limit it runs `DecisionTreeRegressor
+    * .fit` as is. The branch taken, with the cell count and the limit,
+    * is the Spark job description of the jobs that follow the decision
+    * (the fit's rest and the save). */
   def trainAssembled(assembled: DataFrame, spec0: FeatureSpec, modelPath: String,
-                     maxDepth: Int = DefaultMaxDepth, maxBins: Int = DefaultMaxBins,
-                     fitPartitions: Int = 0): DecisionTreeRegressionModel = {
+                     maxDepth: Int = DefaultMaxDepth,
+                     maxBins: Int = DefaultMaxBins): DecisionTreeRegressionModel = {
     val spec = spec0.sanitized
-    val prepared0 = assembled.filter(col(spec.sanitizedLabel).isNotNull)
-    val prepared =
-      if (fitPartitions > 0 && prepared0.rdd.getNumPartitions < fitPartitions)
-        prepared0.repartition(fitPartitions)
-      else prepared0
+    val prepared = assembled.filter(col(spec.sanitizedLabel).isNotNull)
     val dt = new DecisionTreeRegressor()
       .setImpurity(Impurity)
       .setMaxDepth(maxDepth)
@@ -81,9 +92,26 @@ object DecisionTree {
       // `prepared` carries sanitized (hyphen→underscore) column names
       .setLabelCol(spec.sanitizedLabel)
       .setSeed(42L)
-    val model = dt.fit(prepared)
-    model.write.overwrite().save(modelPath)
-    model
+    val session = prepared.sparkSession
+    val limit = session.conf.get(MaxCellsConf, DefaultMaxCells.toString).toInt
+    val binned = GraftTreeBridge.bin(dt, prepared)
+    val numFeatures = binned.arity.length
+    val cells = binned.rows.treeAggregate(new Cells(numFeatures, limit),
+      (t: Cells, r: (Array[Int], Double)) => t.addRow(r._1, r._2),
+      (a: Cells, b: Cells) => a.merge(b), depth = 2, finalAggregateOnExecutor = true)
+    val sc = session.sparkContext
+    val description = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(
+      if (cells.overflow) s"DecisionTree fit: branch=mllib cells>$limit limit=$limit"
+      else s"DecisionTree fit: branch=driver cells=${cells.size} limit=$limit")
+    try {
+      val model =
+        if (cells.overflow) dt.fit(prepared)
+        else GraftTreeBridge.model(dt,
+          CellTree.grow(cells, binned.splits, binned.arity, maxDepth), numFeatures)
+      model.write.overwrite().save(modelPath)
+      model
+    } finally sc.setJobDescription(description)
   }
 
   def load(spark: org.apache.spark.sql.SparkSession, modelPath: String): DecisionTreeRegressionModel =

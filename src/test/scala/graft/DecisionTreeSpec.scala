@@ -1,6 +1,11 @@
 package graft
 
 import graft.ml.{DecisionTree, FeatureSpec, FeatureVectorizer}
+import graft.operators.TextAnalysis
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.regression.DecisionTreeRegressionModel
+import org.apache.spark.ml.tree.{CategoricalSplit, ContinuousSplit, InternalNode, LeafNode, Node, Split}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -285,5 +290,121 @@ class DecisionTreeSpec extends SparkSpec {
     assert(scored.filter(col("pred").isNotNull).count() == flights.count())
     // the scored frame keeps the (sanitized) feature column
     assert(scored.columns.contains("day_of_week"))
+  }
+
+  /** The branch named in the fit's job description while `fit` runs. */
+  private def fitBranch(fit: => Unit): String = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("DecisionTree fit:")).foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      fit
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(!seen.isEmpty, "no job carried the fit's description")
+      "branch=(\\w+)".r.findFirstMatchIn(seen.peek()).map(_.group(1)).getOrElse(seen.peek())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def close(a: Double, b: Double): Boolean =
+    math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b))
+
+  private def goesLeft(split: Split, v: Vector): Boolean = split match {
+    case c: ContinuousSplit => v(c.featureIndex) <= c.threshold
+    case c: CategoricalSplit => c.leftCategories.contains(v(c.featureIndex))
+  }
+
+  /** Same shape, splits and leaf predictions (1e-12 relative) over the
+    * training `rows` that reach `a` and `b`. A node may split on another
+    * feature or threshold only on an exact tie: the same gain and the
+    * same rows sent left, so the subtrees below see the same rows. Such
+    * ties are decided by summation order, in MLlib's own fit too: it
+    * picks another feature for one of 1,057 nodes on the lineitem frame
+    * at depth 10 when the same rows arrive repartitioned. Returns the
+    * number of tie splits. */
+  private def assertSameTree(a: Node, b: Node, rows: Seq[Vector], path: String): Int = (a, b) match {
+    case (x: InternalNode, y: InternalNode) =>
+      val (l, r) = rows.partition(goesLeft(x.split, _))
+      val tie = if (x.split == y.split) 0 else {
+        assert(close(x.gain, y.gain) && rows.filter(goesLeft(y.split, _)) == l,
+          s"$path: ${x.split} (gain ${x.gain}) vs ${y.split} (gain ${y.gain})")
+        1
+      }
+      tie + assertSameTree(x.leftChild, y.leftChild, l, path + "L") +
+        assertSameTree(x.rightChild, y.rightChild, r, path + "R")
+    case (x: LeafNode, y: LeafNode) =>
+      assert(close(x.prediction, y.prediction), s"$path: ${x.prediction} vs ${y.prediction}")
+      0
+    case _ => fail(s"$path: $a vs $b")
+  }
+
+  private val lineitemSpec = FeatureSpec(
+    include = Some(Seq("l_quantity", "l_discount", "l_tax")), labelField = "l_extendedprice")
+
+  test("the driver-grown tree equals MLlib's fit, and the cell limit picks the branch") {
+    val qualityFeats = TextAnalysis.qualityFeatures(Tables.documents(spark, Sf))
+      .withColumn("label", (col("words") >= 30 && col("alpha_ratio") >= 0.6).cast("double"))
+    val qualitySpec = FeatureSpec(
+      include = Some(Seq("words", "alpha_ratio", "punct_ratio", "stop_ratio")), labelField = "label")
+    // the frames of ml_train_predict (also at ml_score's depth 10),
+    // pipe_ml_filter and the flight-shaped spec frames (dofW categorical)
+    val frames = Seq(
+      ("ml_train_predict", Tables.lineitem(spark, Sf), lineitemSpec, 6),
+      ("lineitem depth 10", Tables.lineitem(spark, Sf), lineitemSpec, 10),
+      ("pipe_ml_filter", qualityFeats, qualitySpec, 6),
+      ("flights", flights, trainSpec, 9),
+      ("synthetic flights", syntheticFlights(4000), trainSpec, 9))
+    frames.foreach { case (name, df, spec, depth) =>
+      val assembled = FeatureVectorizer.assemble(df.filter(col(spec.labelField).isNotNull), spec)
+      def fit(): DecisionTreeRegressionModel = {
+        val dir = java.nio.file.Files.createTempDirectory("graft-dt-branch")
+        try DecisionTree.trainAssembled(assembled, spec, dir.toString, maxDepth = depth)
+        finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      }
+      var driver: DecisionTreeRegressionModel = null
+      var mllib: DecisionTreeRegressionModel = null
+      assert(fitBranch { driver = fit() } == "driver", name)
+      assert(fitBranch { withConf(DecisionTree.MaxCellsConf -> "1") { mllib = fit() } } == "mllib", name)
+      assert(driver.numNodes == mllib.numNodes && driver.numNodes > 1, name)
+      val rows = assembled.select(FeatureVectorizer.FeaturesCol).collect().map(_.getAs[Vector](0)).toSeq
+      val ties = assertSameTree(driver.rootNode, mllib.rootNode, rows, s"$name root")
+      info(s"$name: ${driver.numNodes} nodes, $ties tie splits on another feature or threshold")
+      assert(driver.extractParamMap().toSeq.map(p => p.param.name -> p.value).toMap ==
+        mllib.extractParamMap().toSeq.map(p => p.param.name -> p.value).toMap, name)
+      val scoring = spec.copy(labelField = "unused")
+      val p = Seq(driver, mllib).map(m =>
+        DecisionTree.predict(df, m, scoring, "p").select("p").collect().map(_.getDouble(0)))
+      assert(p(0).length == p(1).length)
+      p(0).zip(p(1)).foreach { case (a, b) => assert(close(a, b), s"$name: $a vs $b") }
+    }
+  }
+
+  test("a NaN label fails the fit with MLlib's label check") {
+    val nan = syntheticFlights(500)
+      .withColumn("delayed", when(col("dofM") === 3, lit(Double.NaN)).otherwise(col("delayed")))
+    val dir = java.nio.file.Files.createTempDirectory("graft-dt-nan")
+    val e = try intercept[Exception](DecisionTree.train(nan, trainSpec, dir.toString, maxDepth = 3))
+      finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toList
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("Labels MUST NOT be Null or NaN")),
+      s"cause chain: ${causes.mkString(" <- ")}")
+  }
+
+  test("ml_train_predict and pipe_ml_filter leave no model dir behind") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def modelDirs(): Set[String] = {
+      val names = java.nio.file.Files.list(tmp)
+      try names.toArray.map(_.toString).filter(n => n.contains("graft-dt-model") ||
+        n.contains("graft-mlfilter-model")).toSet
+      finally names.close()
+    }
+    val before = modelDirs()
+    Seq("ml_train_predict", "pipe_ml_filter").foreach(SparkEntry.queries(_)(spark, Sf))
+    CacheRegistry.releaseAll()
+    assert(modelDirs() -- before == Set.empty)
   }
 }
