@@ -1,6 +1,7 @@
 package graft.ml
 
-import scala.util.hashing.MurmurHash3
+import scala.collection.mutable
+import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.ml.tree.{LeafNode, Node, Split}
 import org.apache.spark.ml.tree.impl.GraftTreeBridge
@@ -8,90 +9,51 @@ import org.apache.spark.ml.tree.impl.GraftTreeBridge
 /** Binned training rows reduced to one cell per distinct bin tuple,
   * each carrying `(count, Σy, Σy²)`: the layout of MLlib's
   * `VarianceAggregator` stats, which is all a variance-impurity tree
-  * needs from its rows. An open-addressing table over dense arrays;
-  * cells keep their insertion order. Holding more than `limit` cells
-  * sets `overflow` and drops the contents, so a table never grows past
-  * about `limit × (8 × numFeatures + 64)` bytes. */
-private[ml] final class Cells(val numFeatures: Int, val limit: Int) extends Serializable {
-  private[ml] var size = 0
-  private[ml] var overflow = false
-  private[ml] var bins = new Array[Int](16 * numFeatures)
-  private[ml] var stats = new Array[Double](16 * 3)
-  private var slots = new Array[Int](32) // cell index + 1; 0 is free
+  * needs from its rows. Adding a cell past `limit` sets `overflow` and
+  * drops the table, so a table never holds more than `limit` cells. */
+private[graft] final class Cells(val limit: Int) extends Serializable {
+  private var table = mutable.HashMap.empty[ArraySeq.ofInt, Array[Double]]
 
-  def addRow(key: Array[Int], label: Double): Cells = {
-    add(key, 0, 1.0, label, label * label)
-    this
-  }
+  def overflow: Boolean = table == null
+
+  def size: Int = table.size
+
+  def add(key: ArraySeq.ofInt, n: Double, sum: Double, sumSq: Double): Unit =
+    if (table != null) {
+      val s = table.getOrElse(key, null)
+      if (s != null) { s(0) += n; s(1) += sum; s(2) += sumSq }
+      else if (table.size < limit) {
+        val t = new Array[Double](3)
+        t(0) = n; t(1) = sum; t(2) = sumSq
+        table(key) = t
+      } else table = null
+    }
 
   def merge(other: Cells): Cells = {
-    if (other.overflow) drop()
-    var c = 0
-    while (c < other.size && !overflow) {
-      add(other.bins, c * numFeatures, other.stats(3 * c), other.stats(3 * c + 1), other.stats(3 * c + 2))
-      c += 1
-    }
+    if (other.overflow) table = null
+    else other.table.foreachEntry((k, s) => add(k, s(0), s(1), s(2)))
     this
   }
 
-  private def add(key: Array[Int], at: Int, n: Double, sum: Double, sumSq: Double): Unit =
-    if (!overflow) {
-      val c = cellOf(key, at)
-      if (c >= 0) {
-        stats(3 * c) += n
-        stats(3 * c + 1) += sum
-        stats(3 * c + 2) += sumSq
-      }
-    }
+  def foreach(f: (Array[Int], Array[Double]) => Unit): Unit =
+    table.foreachEntry((k, s) => f(k.unsafeArray, s))
+}
 
-  /** The cell of `key(at until at + numFeatures)`, inserted if new; -1
-    * once that would pass `limit`. */
-  private def cellOf(key: Array[Int], at: Int): Int = {
-    val mask = slots.length - 1
-    var s = hash(key, at) & mask
-    while (slots(s) != 0) {
-      val c = slots(s) - 1
-      if (java.util.Arrays.equals(bins, c * numFeatures, (c + 1) * numFeatures,
-          key, at, at + numFeatures)) return c
-      s = (s + 1) & mask
-    }
-    if (size >= limit) { drop(); return -1 }
-    if (size * numFeatures == bins.length) {
-      bins = java.util.Arrays.copyOf(bins, 2 * bins.length)
-      stats = java.util.Arrays.copyOf(stats, 2 * stats.length)
-    }
-    System.arraycopy(key, at, bins, size * numFeatures, numFeatures)
-    slots(s) = size + 1
-    size += 1
-    if (2 * size > slots.length) rehash()
-    size - 1
-  }
+private[graft] object Cells {
 
-  private def hash(key: Array[Int], at: Int): Int = {
-    var h = MurmurHash3.arraySeed
-    var i = 0
-    while (i < numFeatures) { h = MurmurHash3.mix(h, key(at + i)); i += 1 }
-    MurmurHash3.finalizeHash(h, numFeatures)
-  }
+  /** The heap a table may take: 16 MB, in each aggregating task and
+    * once more on the driver. MLlib's own fit lets each task take 256 MB
+    * (`maxMemoryInMB`) for one level's split statistics. */
+  val Budget: Long = 16L << 20
 
-  private def rehash(): Unit = {
-    slots = new Array[Int](2 * slots.length)
-    val mask = slots.length - 1
-    var c = 0
-    while (c < size) {
-      var s = hash(bins, c * numFeatures) & mask
-      while (slots(s) != 0) s = (s + 1) & mask
-      slots(s) = c + 1
-      c += 1
-    }
-  }
-
-  private def drop(): Unit = {
-    overflow = true
-    bins = null
-    stats = null
-    slots = null
-  }
+  /** The most cells a table over `numFeatures` features holds within
+    * [[Budget]]: 119,837 at one feature, 31,300 at 100. A cell takes
+    * 136 + 4 B per feature, with compressed references: the map entry
+    * (32 B), the key wrapper (16 B), the bin indices (16 + 4 B per
+    * feature, padded to 8), the stats (40 B), and its share of the slot
+    * array and of the one a resize replaced (up to 16 B together),
+    * rounded up. */
+  def limit(numFeatures: Int): Int = (Budget / (136L + 4L * numFeatures)).toInt
 }
 
 /** Grows, on the driver, the tree MLlib's `RandomForest` grows for a
@@ -116,8 +78,18 @@ private[ml] final class Cells(val numFeatures: Int, val limit: Int) extends Seri
   *    are pruned into their parent, as `LearningNode.toNode` does. */
 private[ml] object CellTree {
 
-  def grow(cells: Cells, splits: Array[Array[Split]], arity: Array[Int], maxDepth: Int): Node =
-    new Grower(cells, splits, arity, maxDepth).node(0, cells.size, 0, null)
+  def grow(cells: Cells, splits: Array[Array[Split]], arity: Array[Int], maxDepth: Int): Node = {
+    val nf = arity.length
+    val bins = new Array[Int](cells.size * nf)
+    val stats = new Array[Double](cells.size * 3)
+    var c = 0
+    cells.foreach { (key, s) =>
+      System.arraycopy(key, 0, bins, c * nf, nf)
+      System.arraycopy(s, 0, stats, 3 * c, 3)
+      c += 1
+    }
+    new Grower(bins, stats, splits, arity, maxDepth).node(0, cells.size, 0, null)
+  }
 
   /** VarianceCalculator's `calculate` and `predict` over (count, Σy, Σy²). */
   private def variance(s: Array[Double]): Double =
@@ -127,14 +99,16 @@ private[ml] object CellTree {
 
   private def leaf(s: Array[Double]): Node = GraftTreeBridge.leaf(predict(s), variance(s), s)
 
-  private final class Grower(cells: Cells, splits: Array[Array[Split]], arity: Array[Int],
-                             maxDepth: Int) {
+  /** `cellBins` holds each cell's bin tuple and `cellStats` its
+    * (count, Σy, Σy²), cell after cell. */
+  private final class Grower(cellBins: Array[Int], cellStats: Array[Double],
+                             splits: Array[Array[Split]], arity: Array[Int], maxDepth: Int) {
     private val nf = arity.length
     private val numBins = Array.tabulate(nf)(f => if (arity(f) > 0) arity(f) else splits(f).length + 1)
     private val numSplits = Array.tabulate(nf)(f => numBins(f) - 1)
     private val offset = numBins.scanLeft(0)(_ + _)
-    private val order = Array.range(0, cells.size)
-    private val scratch = new Array[Int](cells.size)
+    private val order = Array.range(0, cellStats.length / 3)
+    private val scratch = new Array[Int](order.length)
 
     /** The subtree over the cells `order(from until until)`; `stats` is
       * the node's (count, Σy, Σy²) from its parent's split, null at the
@@ -147,7 +121,7 @@ private[ml] object CellTree {
         val c = order(i)
         var f = 0
         while (f < nf) {
-          addCell(agg, 3 * (offset(f) + cells.bins(c * nf + f)), c)
+          addCell(agg, 3 * (offset(f) + cellBins(c * nf + f)), c)
           f += 1
         }
         addCell(total, 0, c)
@@ -212,7 +186,7 @@ private[ml] object CellTree {
           if (cat) GraftTreeBridge.categoricalSplit(bestFeature,
             bestOrder.take(bestSplit + 1).map(_.toDouble), arity(bestFeature))
           else splits(bestFeature)(bestSplit)
-        val mid = partition(from, until, c => goesLeft(cells.bins(c * nf + bestFeature)))
+        val mid = partition(from, until, c => goesLeft(cellBins(c * nf + bestFeature)))
         def child(lo: Int, hi: Int, s: Array[Double]): Node =
           if (level + 1 == maxDepth || math.abs(variance(s)) < GraftTreeBridge.Epsilon) leaf(s)
           else node(lo, hi, level + 1, s)
@@ -226,9 +200,9 @@ private[ml] object CellTree {
     }
 
     private def addCell(agg: Array[Double], o: Int, c: Int): Unit = {
-      agg(o) += cells.stats(3 * c)
-      agg(o + 1) += cells.stats(3 * c + 1)
-      agg(o + 2) += cells.stats(3 * c + 2)
+      agg(o) += cellStats(3 * c)
+      agg(o + 1) += cellStats(3 * c + 1)
+      agg(o + 2) += cellStats(3 * c + 2)
     }
 
     /** Stable partition of `order(from until until)`: cells going left

@@ -1,5 +1,7 @@
 package graft.ml
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.ml.attribute.NumericAttribute
 import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
 import org.apache.spark.ml.tree.impl.GraftTreeBridge
@@ -26,11 +28,13 @@ import org.apache.spark.sql.functions._
   * MLlib's own metadata and split candidates. The rows are then
   * reduced in one distributed aggregate to (count, Σy, Σy²) per
   * distinct bin tuple, a "cell"; cells ≤ min(rows, ∏ bins per
-  * feature). Within `spark.graft.ml.treeMaxCells` the tree is grown on
-  * the driver from the cells, which cost memory per cell, not per row.
-  * Past it (at 100 TB with several continuous features, say) MLlib's
-  * level-wise fit runs as is: one distributed pass per level, its
-  * driver memory maxBins × features × nodes per level, not data size.
+  * feature). While the cells fit a fixed heap budget ([[Cells]], 16 MB:
+  * 119,837 cells at one feature, 31,300 at 100) the tree is grown on
+  * the driver from them, at a cost per cell, not per row. Past it (at
+  * 100 TB with several continuous features, say) each task stops
+  * reading its rows and MLlib's level-wise fit runs: one distributed
+  * pass per level, its memory maxBins × features × nodes per level,
+  * not data size.
   */
 object DecisionTree {
 
@@ -52,17 +56,6 @@ object DecisionTree {
       df.filter(col(spec.labelField).isNotNull), spec), spec, modelPath, maxDepth, maxBins)
   }
 
-  /** Session conf: the most bin-tuple cells the one-scan fit grows on
-    * the driver; a fit input with more runs MLlib's level-wise fit. */
-  val MaxCellsConf = "spark.graft.ml.treeMaxCells"
-
-  /** 2^18 cells. A [[Cells]] table spends 64 to 128 B per cell at 8
-    * features (32 B of bin indices and 24 B of stats in arrays grown by
-    * doubling, 8 to 16 B of hash slots), so at most about 34 MB on the
-    * driver and in each aggregating task; the driver grows the tree
-    * over them in one walk per level, well under a second. */
-  private val DefaultMaxCells: Int = 1 << 18
-
   /** Fit + save over an ALREADY-assembled frame (the null-label drop
     * is applied here; assembly is row-preserving, so filtering before
     * or after it is equivalent).
@@ -72,16 +65,25 @@ object DecisionTree {
     * seed 42), bins the rows as MLlib does, and reduces them in ONE
     * aggregate job to (count, Σy, Σy²) per distinct bin tuple ("cell").
     * A variance-impurity tree needs nothing else from its rows, so when
-    * there are at most `spark.graft.ml.treeMaxCells` cells the tree is
+    * the cells fit [[Cells.limit]] for the feature count the tree is
     * grown on the driver from them ([[CellTree]]), with MLlib's splits,
     * gain rule, tie order and pruning, instead of MLlib's one pass over
-    * every row per level. Past the limit it runs `DecisionTreeRegressor
-    * .fit` as is. The branch taken, with the cell count and the limit,
-    * is the Spark job description of the jobs that follow the decision
+    * every row per level. Past the limit a task stops reading its rows,
+    * and MLlib's level-wise fit runs on the same metadata and splits
+    * (`RandomForest.runBagged`, what `DecisionTreeRegressor.fit` runs
+    * after those jobs), so it does not repeat them. The branch taken, with the cell count and the limit, is
+    * the Spark job description of the jobs that follow the decision
     * (the fit's rest and the save). */
   def trainAssembled(assembled: DataFrame, spec0: FeatureSpec, modelPath: String,
                      maxDepth: Int = DefaultMaxDepth,
-                     maxBins: Int = DefaultMaxBins): DecisionTreeRegressionModel = {
+                     maxBins: Int = DefaultMaxBins): DecisionTreeRegressionModel =
+    trainWithCellLimit(assembled, spec0, modelPath, maxDepth, maxBins, Cells.limit)
+
+  /** [[trainAssembled]] with the cell limit given as a function of the
+    * feature count. */
+  private[graft] def trainWithCellLimit(assembled: DataFrame, spec0: FeatureSpec, modelPath: String,
+                                        maxDepth: Int, maxBins: Int,
+                                        maxCells: Int => Int): DecisionTreeRegressionModel = {
     val spec = spec0.sanitized
     val prepared = assembled.filter(col(spec.sanitizedLabel).isNotNull)
     val dt = new DecisionTreeRegressor()
@@ -92,21 +94,26 @@ object DecisionTree {
       // `prepared` carries sanitized (hyphen→underscore) column names
       .setLabelCol(spec.sanitizedLabel)
       .setSeed(42L)
-    val session = prepared.sparkSession
-    val limit = session.conf.get(MaxCellsConf, DefaultMaxCells.toString).toInt
     val binned = GraftTreeBridge.bin(dt, prepared)
     val numFeatures = binned.arity.length
-    val cells = binned.rows.treeAggregate(new Cells(numFeatures, limit),
-      (t: Cells, r: (Array[Int], Double)) => t.addRow(r._1, r._2),
-      (a: Cells, b: Cells) => a.merge(b), depth = 2, finalAggregateOnExecutor = true)
-    val sc = session.sparkContext
+    val limit = maxCells(numFeatures)
+    val merge = (a: Cells, b: Cells) => a.merge(b)
+    val cells = binned.rows.mapPartitions { rows =>
+      val t = new Cells(limit)
+      while (!t.overflow && rows.hasNext) {
+        val (key, y) = rows.next()
+        t.add(new ArraySeq.ofInt(key), 1.0, y, y * y)
+      }
+      Iterator.single(t)
+    }.treeAggregate(new Cells(limit), merge, merge, depth = 2, finalAggregateOnExecutor = true)
+    val sc = prepared.sparkSession.sparkContext
     val description = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(
       if (cells.overflow) s"DecisionTree fit: branch=mllib cells>$limit limit=$limit"
       else s"DecisionTree fit: branch=driver cells=${cells.size} limit=$limit")
     try {
       val model =
-        if (cells.overflow) dt.fit(prepared)
+        if (cells.overflow) binned.fit(dt)
         else GraftTreeBridge.model(dt,
           CellTree.grow(cells, binned.splits, binned.arity, maxDepth), numFeatures)
       model.write.overwrite().save(modelPath)

@@ -4,15 +4,17 @@ import org.apache.spark.ml.feature.Instance
 import org.apache.spark.ml.impl.Utils
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
-import org.apache.spark.ml.tree.{CategoricalSplit, InternalNode, LeafNode, Node, Split}
+import org.apache.spark.ml.tree.{CategoricalSplit, InternalNode, LeafNode, Node, Split, TreeConfig}
 import org.apache.spark.ml.util.{DatasetUtils, MetadataUtils}
+import org.apache.spark.mllib.tree.configuration.Strategy
 import org.apache.spark.mllib.tree.impurity.VarianceCalculator
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.storage.StorageLevel
 
 /** Bridge exposing the package-private pieces of MLlib's tree learner
-  * (its metadata, split candidates, binning and node constructors) to
-  * graft's one-scan tree fit, the same-package pattern as
+  * (its metadata, split candidates, binning, level-wise fit and node
+  * constructors) to graft's one-scan tree fit, the same-package pattern as
   * `GraftColumnBridge`. Every step here is the one
   * `DecisionTreeRegressor.fit` takes, called with the same arguments,
   * so the binning a caller sees is the binning MLlib's fit would use. */
@@ -22,11 +24,39 @@ object GraftTreeBridge {
     * made a leaf without evaluating splits. */
   val Epsilon: Double = Utils.EPSILON
 
-  /** A fit input as MLlib bins it: each row as (bin tuple, label), the
-    * split candidates per feature (empty for a categorical feature)
-    * and each feature's arity (0 for a continuous feature). */
-  final case class Binned(rows: RDD[(Array[Int], Double)], splits: Array[Array[Split]],
-                          arity: Array[Int])
+  /** A fit input as MLlib bins it, with the metadata and split
+    * candidates (`splits`, empty for a categorical feature) MLlib's fit
+    * computes for it. */
+  final class Binned private[GraftTreeBridge] (points: RDD[TreePoint], strategy: Strategy,
+                                               metadata: DecisionTreeMetadata,
+                                               val splits: Array[Array[Split]]) {
+
+    /** Each feature's arity, 0 for a continuous feature. */
+    val arity: Array[Int] =
+      Array.tabulate(metadata.numFeatures)(f => metadata.featureArity.getOrElse(f, 0))
+
+    /** Each row as (bin tuple, label); lazy. */
+    def rows: RDD[(Array[Int], Double)] = points.map(p => (p.binnedFeatures, p.label))
+
+    /** The model `dt.fit` returns for these rows: MLlib's level-wise fit
+      * as `RandomForest.run` calls it for one tree, after the metadata
+      * and split jobs this input has already run. */
+    def fit(dt: DecisionTreeRegressor): DecisionTreeRegressionModel = {
+      val bcSplits = points.sparkContext.broadcast(splits)
+      val bagged = BaggedPoint.convertToBaggedRDD(points, strategy.subsamplingRate, numSubsamples = 1,
+        strategy.bootstrap, (p: TreePoint) => p.weight, dt.getSeed)
+        .persist(StorageLevel.MEMORY_AND_DISK).setName("bagged tree points")
+      try {
+        val tree = RandomForest.runBagged(bagged, metadata, bcSplits, strategy, numTrees = 1,
+          featureSubsetStrategy = "all", dt.getSeed, instr = None, prune = true,
+          parentUID = Some(dt.uid), TreeConfig.trainingEarlyStopModelSizeThresholdInBytes)
+        model(dt, tree.head.rootNode, metadata.numFeatures)
+      } finally {
+        bagged.unpersist()
+        bcSplits.destroy()
+      }
+    }
+  }
 
   /** Validates `dataset` as `dt.fit` does, builds the `Instance` RDD
     * `DecisionTreeRegressor.train` builds (with its label, weight and
@@ -42,11 +72,11 @@ object GraftTreeBridge {
       DatasetUtils.checkNonNegativeWeights(dt.get(dt.weightCol)),
       DatasetUtils.checkNonNanVectors(dt.getFeaturesCol))
       .rdd.map { case Row(l: Double, w: Double, v: Vector) => Instance(l, w, v) }
-    val metadata = DecisionTreeMetadata.buildMetadata(instances,
-      dt.getOldStrategy(categorical), numTrees = 1, featureSubsetStrategy = "all")
+    val strategy = dt.getOldStrategy(categorical)
+    val metadata = DecisionTreeMetadata.buildMetadata(instances, strategy, numTrees = 1,
+      featureSubsetStrategy = "all")
     val splits = RandomForest.findSplits(instances, metadata, dt.getSeed)
-    Binned(TreePoint.convertToTreeRDD(instances, splits, metadata).map(p => (p.binnedFeatures, p.label)),
-      splits, Array.tabulate(metadata.numFeatures)(f => metadata.featureArity.getOrElse(f, 0)))
+    new Binned(TreePoint.convertToTreeRDD(instances, splits, metadata), strategy, metadata, splits)
   }
 
   /** `stats` is VarianceCalculator's (count, Σy, Σy²) over unit-weight

@@ -1,9 +1,11 @@
 package graft
 
-import graft.ml.{DecisionTree, FeatureSpec, FeatureVectorizer}
+import scala.collection.immutable.ArraySeq
+
+import graft.ml.{Cells, DecisionTree, FeatureSpec, FeatureVectorizer}
 import graft.operators.TextAnalysis
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.regression.DecisionTreeRegressionModel
+import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
 import org.apache.spark.ml.tree.{CategoricalSplit, ContinuousSplit, InternalNode, LeafNode, Node, Split}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -345,6 +347,30 @@ class DecisionTreeSpec extends SparkSpec {
   private val lineitemSpec = FeatureSpec(
     include = Some(Seq("l_quantity", "l_discount", "l_tax")), labelField = "l_extendedprice")
 
+  /** `DecisionTreeRegressor.fit` with the estimator `DecisionTree`
+    * builds, on the assembled frame. */
+  private def mllibFit(assembled: DataFrame, spec: FeatureSpec, depth: Int): DecisionTreeRegressionModel =
+    new DecisionTreeRegressor().setImpurity("variance").setMaxDepth(depth)
+      .setMaxBins(DecisionTree.DefaultMaxBins).setFeaturesCol(FeatureVectorizer.FeaturesCol)
+      .setLabelCol(spec.sanitizedLabel).setSeed(42L).fit(assembled)
+
+  /** Fits through `DecisionTree.trainWithCellLimit` into a temp dir it
+    * deletes; returns the model and the branch its job description names. */
+  private def fitWithLimit(assembled: DataFrame, spec: FeatureSpec, depth: Int,
+                           maxCells: Int => Int): (DecisionTreeRegressionModel, String) = {
+    var model: DecisionTreeRegressionModel = null
+    val branch = fitBranch {
+      val dir = java.nio.file.Files.createTempDirectory("graft-dt-branch")
+      try model = DecisionTree.trainWithCellLimit(assembled, spec, dir.toString, depth,
+        DecisionTree.DefaultMaxBins, maxCells)
+      finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+    (model, branch)
+  }
+
+  private def features(assembled: DataFrame): Seq[Vector] =
+    assembled.select(FeatureVectorizer.FeaturesCol).collect().map(_.getAs[Vector](0)).toSeq
+
   test("the driver-grown tree equals MLlib's fit, and the cell limit picks the branch") {
     val qualityFeats = TextAnalysis.qualityFeatures(Tables.documents(spark, Sf))
       .withColumn("label", (col("words") >= 30 && col("alpha_ratio") >= 0.6).cast("double"))
@@ -360,18 +386,11 @@ class DecisionTreeSpec extends SparkSpec {
       ("synthetic flights", syntheticFlights(4000), trainSpec, 9))
     frames.foreach { case (name, df, spec, depth) =>
       val assembled = FeatureVectorizer.assemble(df.filter(col(spec.labelField).isNotNull), spec)
-      def fit(): DecisionTreeRegressionModel = {
-        val dir = java.nio.file.Files.createTempDirectory("graft-dt-branch")
-        try DecisionTree.trainAssembled(assembled, spec, dir.toString, maxDepth = depth)
-        finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-      }
-      var driver: DecisionTreeRegressionModel = null
-      var mllib: DecisionTreeRegressionModel = null
-      assert(fitBranch { driver = fit() } == "driver", name)
-      assert(fitBranch { withConf(DecisionTree.MaxCellsConf -> "1") { mllib = fit() } } == "mllib", name)
+      val (driver, branch) = fitWithLimit(assembled, spec, depth, Cells.limit)
+      assert(branch == "driver", name)
+      val mllib = mllibFit(assembled, spec, depth)
       assert(driver.numNodes == mllib.numNodes && driver.numNodes > 1, name)
-      val rows = assembled.select(FeatureVectorizer.FeaturesCol).collect().map(_.getAs[Vector](0)).toSeq
-      val ties = assertSameTree(driver.rootNode, mllib.rootNode, rows, s"$name root")
+      val ties = assertSameTree(driver.rootNode, mllib.rootNode, features(assembled), s"$name root")
       info(s"$name: ${driver.numNodes} nodes, $ties tie splits on another feature or threshold")
       assert(driver.extractParamMap().toSeq.map(p => p.param.name -> p.value).toMap ==
         mllib.extractParamMap().toSeq.map(p => p.param.name -> p.value).toMap, name)
@@ -381,6 +400,49 @@ class DecisionTreeSpec extends SparkSpec {
       assert(p(0).length == p(1).length)
       p(0).zip(p(1)).foreach { case (a, b) => assert(close(a, b), s"$name: $a vs $b") }
     }
+    // past the limit the fit is MLlib's own
+    val assembled = FeatureVectorizer.assemble(
+      syntheticFlights(4000).filter(col("delayed").isNotNull), trainSpec)
+    val (fallback, branch) = fitWithLimit(assembled, trainSpec, 9, _ => 1)
+    assert(branch == "mllib")
+    assert(assertSameTree(fallback.rootNode, mllibFit(assembled, trainSpec, 9).rootNode,
+      features(assembled), "fallback root") == 0)
+  }
+
+  test("a cell table stays within its heap budget; a wide frame past it takes MLlib's fit") {
+    // the heap a full table takes, as the bytes this thread allocates
+    // to fill it (an upper bound: it also counts replaced slot arrays)
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val thread = Thread.currentThread().getId
+    assume(threads.getThreadAllocatedBytes(thread) >= 0, "no per-thread allocation counter")
+    for (nf <- Seq(1, 2, 3, 8, 100, 1000)) {
+      val limit = Cells.limit(nf)
+      def key(c: Int) = { val k = new Array[Int](nf); k(0) = c; new ArraySeq.ofInt(k) }
+      val before = threads.getThreadAllocatedBytes(thread)
+      val t = new Cells(limit)
+      var c = 0
+      while (c < limit) { t.add(key(c), 1.0, c.toDouble, 1.0); c += 1 }
+      val heap = threads.getThreadAllocatedBytes(thread) - before
+      t.add(key(0), 1.0, 0.0, 0.0)
+      assert(!t.overflow && t.size == limit, s"$nf features")
+      info(s"$nf features: $limit cells, ${heap >> 10} KiB of ${Cells.Budget >> 10}")
+      assert(heap <= Cells.Budget, s"$nf features")
+      t.add(key(limit), 1.0, 0.0, 0.0)
+      assert(t.overflow, s"$nf features")
+    }
+    // every column a feature: 400 continuous features, each row its own
+    // cell, more rows than the 400-feature limit
+    val width = 400
+    val rows = Cells.limit(width) + 2000
+    val wide = spark.range(rows).select(
+      (col("id") % 7).cast("double").as("y") +:
+        (0 until width).map(f => (abs(xxhash64(col("id"), lit(f))) % 1000).cast("double").as(s"f$f")): _*)
+    val spec = FeatureSpec(labelField = "y")
+    val assembled = FeatureVectorizer.assemble(wide, spec)
+    val (model, branch) = fitWithLimit(assembled, spec, 2, Cells.limit)
+    assert(branch == "mllib")
+    assert(model.numFeatures == width && model.numNodes > 1)
   }
 
   test("a NaN label fails the fit with MLlib's label check") {
