@@ -6,19 +6,20 @@ import scala.collection.immutable.ArraySeq
 import org.apache.spark.ml.tree.{LeafNode, Node, Split}
 import org.apache.spark.ml.tree.impl.GraftTreeBridge
 
-/** Binned training rows reduced to one cell per distinct bin tuple,
-  * each carrying `(count, Σy, Σy²)`: the layout of MLlib's
-  * `VarianceAggregator` stats, which is all a variance-impurity tree
-  * needs from its rows. Adding a cell past `limit` sets `overflow` and
-  * drops the table, so a table never holds more than `limit` cells. */
-private[graft] final class Cells(val limit: Int) extends Serializable {
-  private var table = mutable.HashMap.empty[ArraySeq.ofInt, Array[Double]]
+/** Training rows reduced to one cell per distinct key, each carrying
+  * `(count, Σy, Σy²)`: the layout of MLlib's `VarianceAggregator`
+  * stats, which is all a variance-impurity tree needs from its rows.
+  * A key is a row's raw feature values (as bits, so 0.0 and -0.0 stay
+  * apart) or its bin tuple. Adding a cell past `limit` sets `overflow`
+  * and drops the table, so a table never holds more than `limit` cells. */
+private[graft] final class Cells[K](val limit: Int) extends Serializable {
+  private var table = mutable.HashMap.empty[K, Array[Double]]
 
   def overflow: Boolean = table == null
 
   def size: Int = table.size
 
-  def add(key: ArraySeq.ofInt, n: Double, sum: Double, sumSq: Double): Unit =
+  def add(key: K, n: Double, sum: Double, sumSq: Double): Unit =
     if (table != null) {
       val s = table.getOrElse(key, null)
       if (s != null) { s(0) += n; s(1) += sum; s(2) += sumSq }
@@ -29,14 +30,13 @@ private[graft] final class Cells(val limit: Int) extends Serializable {
       } else table = null
     }
 
-  def merge(other: Cells): Cells = {
+  def merge(other: Cells[K]): Cells[K] = {
     if (other.overflow) table = null
     else other.table.foreachEntry((k, s) => add(k, s(0), s(1), s(2)))
     this
   }
 
-  def foreach(f: (Array[Int], Array[Double]) => Unit): Unit =
-    table.foreachEntry((k, s) => f(k.unsafeArray, s))
+  def foreach(f: (K, Array[Double]) => Unit): Unit = table.foreachEntry(f)
 }
 
 private[graft] object Cells {
@@ -46,14 +46,22 @@ private[graft] object Cells {
     * (`maxMemoryInMB`) for one level's split statistics. */
   val Budget: Long = 16L << 20
 
-  /** The most cells a table over `numFeatures` features holds within
-    * [[Budget]]: 119,837 at one feature, 31,300 at 100. A cell takes
-    * 136 + 4 B per feature, with compressed references: the map entry
-    * (32 B), the key wrapper (16 B), the bin indices (16 + 4 B per
-    * feature, padded to 8), the stats (40 B), and its share of the slot
+  /** The most cells a table over `numFeatures` features, keyed by
+    * `keyBytes` B per feature, holds within [[Budget]]. A cell takes
+    * 136 B plus its key's elements, with compressed references: the map
+    * entry (32 B), the key wrapper (16 B), the key array's header (16 B,
+    * and padding to 8 B), the stats (40 B), and its share of the slot
     * array and of the one a resize replaced (up to 16 B together),
     * rounded up. */
-  def limit(numFeatures: Int): Int = (Budget / (136L + 4L * numFeatures)).toInt
+  def limit(numFeatures: Int, keyBytes: Int): Int = (Budget / (136L + keyBytes.toLong * numFeatures)).toInt
+
+  /** Raw-value keys (8 B a feature): 116,508 cells at one feature,
+    * 17,924 at 100. */
+  val rawLimit: Int => Int = limit(_, 8)
+
+  /** Bin-tuple keys (4 B a feature): 119,837 cells at one feature,
+    * 31,300 at 100. */
+  val binnedLimit: Int => Int = limit(_, 4)
 }
 
 /** Grows, on the driver, the tree MLlib's `RandomForest` grows for a
@@ -78,13 +86,13 @@ private[graft] object Cells {
   *    are pruned into their parent, as `LearningNode.toNode` does. */
 private[ml] object CellTree {
 
-  def grow(cells: Cells, splits: Array[Array[Split]], arity: Array[Int], maxDepth: Int): Node = {
+  def grow(cells: Cells[ArraySeq.ofInt], splits: Array[Array[Split]], arity: Array[Int], maxDepth: Int): Node = {
     val nf = arity.length
     val bins = new Array[Int](cells.size * nf)
     val stats = new Array[Double](cells.size * 3)
     var c = 0
     cells.foreach { (key, s) =>
-      System.arraycopy(key, 0, bins, c * nf, nf)
+      System.arraycopy(key.unsafeArray, 0, bins, c * nf, nf)
       System.arraycopy(s, 0, stats, 3 * c, 3)
       c += 1
     }

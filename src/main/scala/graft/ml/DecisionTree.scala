@@ -24,17 +24,18 @@ import org.apache.spark.sql.functions._
   *    null feature reads as 0.0 there, as its absent slot does in
   *    MLlib, and predictions are bit-identical.
   *
-  * Training has two branches ([[trainAssembled]]). Both start with
-  * MLlib's own metadata and split candidates. The rows are then
-  * reduced in one distributed aggregate to (count, Σy, Σy²) per
-  * distinct bin tuple, a "cell"; cells ≤ min(rows, ∏ bins per
-  * feature). While the cells fit a fixed heap budget ([[Cells]], 16 MB:
-  * 119,837 cells at one feature, 31,300 at 100) the tree is grown on
-  * the driver from them, at a cost per cell, not per row. Past it (at
-  * 100 TB with several continuous features, say) each task stops
-  * reading its rows and MLlib's level-wise fit runs: one distributed
-  * pass per level, its memory maxBins × features × nodes per level,
-  * not data size.
+  * Training reads its assembled rows in one distributed aggregate
+  * ([[trainAssembled]]). That scan draws MLlib's own split sample and
+  * reduces the rows to (count, Σy, Σy²) per distinct feature tuple, a
+  * "cell"; cells ≤ min(rows, distinct values per feature multiplied).
+  * While the cells fit a fixed heap budget ([[Cells]], 16 MB: 116,508
+  * cells at one feature, 17,924 at 100) the driver bins them with
+  * MLlib's splits and grows the tree from them, at a cost per cell,
+  * not per row. Past it a second scan reduces the binned rows, whose
+  * cells ≤ ∏ bins per feature, within the same budget. Past that too
+  * (at 100 TB with several continuous features, say) MLlib's
+  * level-wise fit runs: one distributed pass per level, its memory
+  * maxBins × features × nodes per level, not data size.
   */
 object DecisionTree {
 
@@ -47,9 +48,9 @@ object DecisionTree {
   def train(df: DataFrame, spec: FeatureSpec, modelPath: String,
             maxDepth: Int = DefaultMaxDepth, maxBins: Int = DefaultMaxBins): DecisionTreeRegressionModel = {
     spec.validateLabel(df.schema)
-    // Note: no .cache() on the assembled frame: the fit reads it in
-    // four jobs (MLlib's first row, count and split sample, then the
-    // cell aggregate), and a DataFrame-level persist added
+    // Note: no .cache() on the assembled frame: the fit reads it in one
+    // full scan (after MLlib's first-row and count jobs, which read the
+    // label column only), and a DataFrame-level persist added
     // materialization cost (measured +0.6 s at sf0.1 under MLlib's
     // level-wise fit, which caches its own binned points).
     trainAssembled(FeatureVectorizer.assemble(
@@ -60,30 +61,35 @@ object DecisionTree {
     * is applied here; assembly is row-preserving, so filtering before
     * or after it is equivalent).
     *
-    * The fit takes MLlib's own metadata and split candidates for the
-    * input (the jobs `DecisionTreeRegressor.fit` starts with, with its
-    * seed 42), bins the rows as MLlib does, and reduces them in ONE
-    * aggregate job to (count, Σy, Σy²) per distinct bin tuple ("cell").
-    * A variance-impurity tree needs nothing else from its rows, so when
-    * the cells fit [[Cells.limit]] for the feature count the tree is
-    * grown on the driver from them ([[CellTree]]), with MLlib's splits,
-    * gain rule, tie order and pruning, instead of MLlib's one pass over
-    * every row per level. Past the limit a task stops reading its rows,
-    * and MLlib's level-wise fit runs on the same metadata and splits
-    * (`RandomForest.runBagged`, what `DecisionTreeRegressor.fit` runs
-    * after those jobs), so it does not repeat them. The branch taken, with the cell count and the limit, is
-    * the Spark job description of the jobs that follow the decision
-    * (the fit's rest and the save). */
+    * The fit builds MLlib's metadata for the input (the first-row and
+    * count jobs `DecisionTreeRegressor.fit` starts with, here over the
+    * label column only), then reads the rows in ONE aggregate job. That
+    * job draws the rows MLlib's `findSplits` samples with its seed 42,
+    * so the driver finds MLlib's split candidates from them, and reduces
+    * the rows to (count, Σy, Σy²) per distinct raw feature tuple
+    * ("cell"). A variance-impurity tree needs nothing else from its
+    * rows, so when the cells fit [[Cells.rawLimit]] for the feature
+    * count the driver bins them as MLlib bins a row and grows the tree
+    * from them ([[CellTree]]), with MLlib's splits, gain rule, tie order
+    * and pruning, instead of MLlib's one pass over every row per level.
+    * Past that limit a second aggregate reduces the binned rows, each
+    * task stopping once its table passes [[Cells.binnedLimit]]; past
+    * that too MLlib's level-wise fit runs on the same metadata and
+    * splits (`RandomForest.runBagged`, what `DecisionTreeRegressor.fit`
+    * runs after those jobs). The branch taken (`driver` or `mllib`),
+    * with the tier whose cells it grew from (`raw` or `binned`), the
+    * cell count and the limits, is the Spark job description of the
+    * jobs that follow the decision (the fit's rest and the save). */
   def trainAssembled(assembled: DataFrame, spec0: FeatureSpec, modelPath: String,
                      maxDepth: Int = DefaultMaxDepth,
                      maxBins: Int = DefaultMaxBins): DecisionTreeRegressionModel =
-    trainWithCellLimit(assembled, spec0, modelPath, maxDepth, maxBins, Cells.limit)
+    trainWithCellLimit(assembled, spec0, modelPath, maxDepth, maxBins, Cells.rawLimit, Cells.binnedLimit)
 
-  /** [[trainAssembled]] with the cell limit given as a function of the
-    * feature count. */
+  /** [[trainAssembled]] with each tier's cell limit given as a function
+    * of the feature count. */
   private[graft] def trainWithCellLimit(assembled: DataFrame, spec0: FeatureSpec, modelPath: String,
-                                        maxDepth: Int, maxBins: Int,
-                                        maxCells: Int => Int): DecisionTreeRegressionModel = {
+                                        maxDepth: Int, maxBins: Int, rawCells: Int => Int,
+                                        binnedCells: Int => Int): DecisionTreeRegressionModel = {
     val spec = spec0.sanitized
     val prepared = assembled.filter(col(spec.sanitizedLabel).isNotNull)
     val dt = new DecisionTreeRegressor()
@@ -94,28 +100,57 @@ object DecisionTree {
       // `prepared` carries sanitized (hyphen→underscore) column names
       .setLabelCol(spec.sanitizedLabel)
       .setSeed(42L)
-    val binned = GraftTreeBridge.bin(dt, prepared)
-    val numFeatures = binned.arity.length
-    val limit = maxCells(numFeatures)
-    val merge = (a: Cells, b: Cells) => a.merge(b)
-    val cells = binned.rows.mapPartitions { rows =>
-      val t = new Cells(limit)
-      while (!t.overflow && rows.hasNext) {
-        val (key, y) = rows.next()
-        t.add(new ArraySeq.ofInt(key), 1.0, y, y * y)
-      }
-      Iterator.single(t)
-    }.treeAggregate(new Cells(limit), merge, merge, depth = 2, finalAggregateOnExecutor = true)
+    val input = GraftTreeBridge.input(dt, prepared)
+    val numFeatures = input.numFeatures
+    val rawLimit = rawCells(numFeatures)
+    val (raw, splits) = input.scan[Cells[ArraySeq.ofLong]](() => new Cells(rawLimit),
+      (t, y, x) => {
+        if (!t.overflow) {
+          val key = new Array[Long](numFeatures)
+          x.foreachActive((f, v) => key(f) = java.lang.Double.doubleToRawLongBits(v))
+          t.add(new ArraySeq.ofLong(key), 1.0, y, y * y)
+        }
+        t
+      },
+      _ merge _)
     val sc = prepared.sparkSession.sparkContext
     val description = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(
-      if (cells.overflow) s"DecisionTree fit: branch=mllib cells>$limit limit=$limit"
-      else s"DecisionTree fit: branch=driver cells=${cells.size} limit=$limit")
+    def grow(cells: Cells[ArraySeq.ofInt]) =
+      GraftTreeBridge.model(dt, CellTree.grow(cells, splits, input.arity, maxDepth), numFeatures)
     try {
       val model =
-        if (cells.overflow) binned.fit(dt)
-        else GraftTreeBridge.model(dt,
-          CellTree.grow(cells, binned.splits, binned.arity, maxDepth), numFeatures)
+        if (!raw.overflow) {
+          val bin = input.binner(splits)
+          val cells = new Cells[ArraySeq.ofInt](raw.size)
+          raw.foreach { (key, s) =>
+            cells.add(new ArraySeq.ofInt(bin(key.unsafeArray.map(java.lang.Double.longBitsToDouble))),
+              s(0), s(1), s(2))
+          }
+          sc.setJobDescription(
+            s"DecisionTree fit: branch=driver tier=raw cells=${raw.size} limit=$rawLimit")
+          grow(cells)
+        } else {
+          val binned = input.binned(splits)
+          val limit = binnedCells(numFeatures)
+          val merge = (a: Cells[ArraySeq.ofInt], b: Cells[ArraySeq.ofInt]) => a.merge(b)
+          val cells = binned.rows.mapPartitions { rows =>
+            val t = new Cells[ArraySeq.ofInt](limit)
+            while (!t.overflow && rows.hasNext) {
+              val (key, y) = rows.next()
+              t.add(new ArraySeq.ofInt(key), 1.0, y, y * y)
+            }
+            Iterator.single(t)
+          }.treeAggregate(new Cells[ArraySeq.ofInt](limit), merge, merge, depth = 2,
+            finalAggregateOnExecutor = true)
+          if (!cells.overflow) {
+            sc.setJobDescription(s"DecisionTree fit: branch=driver tier=binned cells=${cells.size} " +
+              s"limit=$limit raw>$rawLimit")
+            grow(cells)
+          } else {
+            sc.setJobDescription(s"DecisionTree fit: branch=mllib raw>$rawLimit binned>$limit")
+            binned.fit(dt)
+          }
+        }
       model.write.overwrite().save(modelPath)
       model
     } finally sc.setJobDescription(description)

@@ -1,12 +1,16 @@
 package graft.ml
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.ml.linalg.SQLDataTypes
 import org.apache.spark.ml.tree.{CategoricalSplit, ContinuousSplit, InternalNode, LeafNode, Node}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeFormatter, CodeGenerator, CodegenContext, ExprCode,
+  FalseLiteral, GraftCodegenBridge}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.Platform
 
@@ -33,7 +37,48 @@ private[ml] trait FeatureChildren extends Expression {
       s"""${e.code}
          |if (${e.isNull}) { ${absent(i)} } else { ${present(i, e.value.toString)} }""".stripMargin
     }
-    ctx.splitExpressionsWithCurrentInputs(parts, funcName = "graftFeatures")
+    if (ctx.currentVars == null) ctx.splitExpressionsWithCurrentInputs(parts, funcName = "graftFeatures")
+    else splitInStage(ctx, parts)
+  }
+
+  /** `parts` under whole-stage codegen, where
+    * `splitExpressionsWithCurrentInputs` inlines everything because the
+    * children read the stage's local variables: a wide feature list
+    * would outgrow the JVM's 64 KB method limit. The parts are cut into
+    * blocks as `splitExpressions` cuts them, and each block becomes a
+    * method taking the local variables its children read. They stay
+    * inline, as before, when one block holds them all, when a child
+    * reads an input the stage has not evaluated yet, or when a block
+    * would need more parameters than a method takes. */
+  private def splitInStage(ctx: CodegenContext, parts: Seq[String]): String = {
+    val threshold = SQLConf.get.methodSplitThreshold
+    val blocks = ArrayBuffer(ArrayBuffer.empty[Int])
+    var length = 0
+    parts.indices.foreach { i =>
+      if (length > threshold) { blocks += ArrayBuffer.empty[Int]; length = 0 }
+      blocks.last += i
+      length += CodeFormatter.stripExtraNewLinesAndComments(parts(i)).length
+    }
+    val deferred = children.exists(_.exists {
+      case b: BoundReference => ctx.currentVars.lift(b.ordinal).exists(v => v != null && v.code.nonEmpty)
+      case _ => false
+    })
+    lazy val args = blocks.toSeq.map(_.flatMap(i => GraftCodegenBridge.localInputs(ctx, children(i)))
+      .distinct.sortBy(_.variableName).toSeq)
+    if (blocks.length == 1 || deferred || !args.forall(a =>
+        CodeGenerator.isValidParamLength(CodeGenerator.calculateParamLengthFromExprValues(a)))) {
+      parts.mkString("\n")
+    } else {
+      blocks.toSeq.zip(args).map { case (block, a) =>
+        val name = ctx.freshName("graftFeatures")
+        val params = a.map(v => s"${CodeGenerator.typeName(v.javaType)} ${v.variableName}")
+        val fn = ctx.addNewFunction(name,
+          s"""private void $name(${params.mkString(", ")}) {
+             |${block.map(parts).mkString("\n")}
+             |}""".stripMargin)
+        s"$fn(${a.map(_.variableName).mkString(", ")});"
+      }.mkString("\n")
+    }
   }
 
   /** Interpreted twin of [[genFeatures]]: `present(i, value)` for each

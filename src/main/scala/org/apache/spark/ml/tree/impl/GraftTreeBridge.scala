@@ -1,39 +1,171 @@
 package org.apache.spark.ml.tree.impl
 
+import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.feature.Instance
 import org.apache.spark.ml.impl.Utils
-import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
-import org.apache.spark.ml.tree.{CategoricalSplit, InternalNode, LeafNode, Node, Split, TreeConfig}
+import org.apache.spark.ml.tree.{CategoricalSplit, ContinuousSplit, InternalNode, LeafNode, Node, Split, TreeConfig}
 import org.apache.spark.ml.util.{DatasetUtils, MetadataUtils}
 import org.apache.spark.mllib.tree.configuration.Strategy
 import org.apache.spark.mllib.tree.impurity.VarianceCalculator
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.collection.OpenHashMap
+import org.apache.spark.util.random.{BernoulliSampler, XORShiftRandom}
 
 /** Bridge exposing the package-private pieces of MLlib's tree learner
   * (its metadata, split candidates, binning, level-wise fit and node
   * constructors) to graft's one-scan tree fit, the same-package pattern as
   * `GraftColumnBridge`. Every step here is the one
-  * `DecisionTreeRegressor.fit` takes, called with the same arguments,
-  * so the binning a caller sees is the binning MLlib's fit would use. */
+  * `DecisionTreeRegressor.fit` takes, called with the same arguments or
+  * drawing the same rows, so the splits and binning a caller sees are
+  * the ones MLlib's fit would use. */
 object GraftTreeBridge {
 
   /** MLlib's `Utils.EPSILON`: a child whose impurity is below it is
     * made a leaf without evaluating splits. */
   val Epsilon: Double = Utils.EPSILON
 
+  /** A fit input: the `Instance` rows `DecisionTreeRegressor.train`
+    * builds, and MLlib's metadata for them. */
+  final class Input private[GraftTreeBridge] (instances: RDD[Instance], strategy: Strategy,
+                                              metadata: DecisionTreeMetadata, seed: Long) {
+
+    val numFeatures: Int = metadata.numFeatures
+
+    /** Each feature's arity, 0 for a continuous feature. */
+    val arity: Array[Int] = Array.tabulate(numFeatures)(f => metadata.featureArity.getOrElse(f, 0))
+
+    private val continuous = arity.indices.filter(metadata.isContinuous).toArray
+
+    /** One pass over the rows. Each partition folds its rows, as (label,
+      * features), into a fresh `zero()` with `add`, and from the same
+      * rows draws the sample `RandomForest.findSplits` draws with the
+      * estimator's seed: `RDD.sample`'s `BernoulliSampler`, seeded per
+      * partition as `PartitionwiseSampledRDD` seeds it, asked once per
+      * row in order, at `samplesFractionForFindSplits`' fraction (every
+      * row at 1; none without a continuous feature). The partial results
+      * are merged in one `treeAggregate` job whose last merges run on the
+      * driver as the results arrive, so a few partitions write no
+      * shuffle. Returns the merged fold and the splits `findSplits`
+      * returns for this sample, found on the driver as
+      * `findSplitsBySorting` finds them (which also sets each continuous
+      * feature's bin count in the metadata). */
+    def scan[C](zero: () => C, add: (C, Double, Vector) => C,
+                merge: (C, C) => C): (C, Array[Array[Split]]) = {
+      val requiredSamples = math.max(metadata.maxBins * metadata.maxBins, 10000)
+      val fraction =
+        if (requiredSamples < metadata.numExamples) requiredSamples.toDouble / metadata.numExamples
+        else 1.0
+      val seeds = {
+        val random = new java.util.Random(new XORShiftRandom(seed).nextInt())
+        Array.fill(instances.getNumPartitions)(random.nextLong())
+      }
+      val features = continuous
+      val newSample = (partitionSeed: Option[Long]) => new SplitSample(features,
+        partitionSeed.filter(_ => fraction < 1).map { s =>
+          val sampler = new BernoulliSampler[Instance](fraction)
+          sampler.setSeed(s)
+          sampler
+        }.orNull)
+      val both = (a: (C, SplitSample), b: (C, SplitSample)) => (merge(a._1, b._1), a._2.merge(b._2))
+      val (folded, sample) = instances.mapPartitionsWithIndex { (i, rows) =>
+        val sample = newSample(Some(seeds(i)))
+        var acc = zero()
+        rows.foreach { row =>
+          sample.add(row)
+          acc = add(acc, row.label, row.features)
+        }
+        Iterator.single((acc, sample))
+      }.treeAggregate((zero(), newSample(None)))(both, both)
+      (folded, splits(sample))
+    }
+
+    private def splits(sample: SplitSample): Array[Array[Split]] = Array.tabulate(numFeatures) { f =>
+      if (metadata.isContinuous(f)) {
+        val j = continuous.indexOf(f)
+        // a feature with no non-zero sampled value gets no split
+        val splits: Array[Split] =
+          if (sample.counts(j) == 0) Array.empty
+          else RandomForest.findSplitsForContinuousFeature(sample.values(j).toMap, sample.counts(j),
+            metadata, f).map(t => new ContinuousSplit(f, t))
+        metadata.setNumSplits(f, splits.length)
+        splits
+      } else {
+        // ordered, as every categorical feature of a regression is:
+        // its splits are built while the tree grows
+        require(!metadata.isUnordered(f), s"feature $f: unordered categorical features are not supported")
+        Array.empty[Split]
+      }
+    }
+
+    /** The bins `TreePoint.convertToTreeRDD` gives a row with these
+      * feature values, and its error for a categorical value outside
+      * the feature's arity. */
+    def binner(splits: Array[Array[Split]]): Array[Double] => Array[Int] = {
+      val thresholds = splits.map(_.map(_.asInstanceOf[ContinuousSplit].threshold))
+      values => Array.tabulate(numFeatures) { f =>
+        val v = values(f)
+        if (arity(f) == 0) {
+          val idx = java.util.Arrays.binarySearch(thresholds(f), v)
+          if (idx >= 0) idx else -idx - 1
+        } else {
+          if (v < 0 || v >= arity(f)) throw new IllegalArgumentException(
+            s"DecisionTree given invalid data: Feature $f is categorical with values in" +
+              s" {0,...,${arity(f) - 1}, but a data point gives it value $v.\n" +
+              s"  Bad data point features: ${Vectors.dense(values)}")
+          v.toInt
+        }
+      }
+    }
+
+    /** The rows binned as MLlib bins them with `splits`. */
+    def binned(splits: Array[Array[Split]]): Binned =
+      new Binned(TreePoint.convertToTreeRDD(instances, splits, metadata), strategy, metadata, splits)
+  }
+
+  /** Per feature, the non-zero values of the sampled rows with their
+    * summed weights and their count: what `findSplitsBySorting`'s
+    * `aggregateByKey` gathers. A null `sampler` takes every row. */
+  private final class SplitSample(features: Array[Int], rowSampler: BernoulliSampler[Instance])
+    extends Serializable {
+    @transient private val sampler = rowSampler
+    val values: Array[OpenHashMap[Double, Double]] = features.map(_ => new OpenHashMap[Double, Double])
+    val counts = new Array[Long](features.length)
+
+    def add(row: Instance): Unit =
+      if (sampler == null || sampler.sample() > 0) {
+        var j = 0
+        while (j < features.length) {
+          val v = row.features(features(j))
+          if (v != 0.0) {
+            values(j).changeValue(v, row.weight, _ + row.weight)
+            counts(j) += 1
+          }
+          j += 1
+        }
+      }
+
+    def merge(other: SplitSample): SplitSample = {
+      var j = 0
+      while (j < features.length) {
+        val m = values(j)
+        other.values(j).foreach { case (v, w) => m.changeValue(v, w, _ + w) }
+        counts(j) += other.counts(j)
+        j += 1
+      }
+      this
+    }
+  }
+
   /** A fit input as MLlib bins it, with the metadata and split
     * candidates (`splits`, empty for a categorical feature) MLlib's fit
     * computes for it. */
   final class Binned private[GraftTreeBridge] (points: RDD[TreePoint], strategy: Strategy,
                                                metadata: DecisionTreeMetadata,
-                                               val splits: Array[Array[Split]]) {
-
-    /** Each feature's arity, 0 for a continuous feature. */
-    val arity: Array[Int] =
-      Array.tabulate(metadata.numFeatures)(f => metadata.featureArity.getOrElse(f, 0))
+                                               splits: Array[Array[Split]]) {
 
     /** Each row as (bin tuple, label); lazy. */
     def rows: RDD[(Array[Int], Double)] = points.map(p => (p.binnedFeatures, p.label))
@@ -60,23 +192,36 @@ object GraftTreeBridge {
 
   /** Validates `dataset` as `dt.fit` does, builds the `Instance` RDD
     * `DecisionTreeRegressor.train` builds (with its label, weight and
-    * vector checks), then runs `DecisionTreeMetadata.buildMetadata`
-    * and `RandomForest.findSplits` with the estimator's seed, and bins
-    * the rows with `TreePoint.convertToTreeRDD`. Runs the metadata and
-    * split-sampling jobs; the binned rows are lazy. */
-  def bin(dt: DecisionTreeRegressor, dataset: Dataset[_]): Binned = {
+    * vector checks), and runs `DecisionTreeMetadata.buildMetadata`
+    * with the estimator's strategy. The metadata reads only the row
+    * count and the vector size, so when the features column's
+    * `AttributeGroup` gives that size it runs over label-only rows
+    * carrying one shared empty vector of it, and Catalyst prunes the
+    * feature columns and their assembly out of those two jobs. The
+    * `Instance` rows are lazy. */
+  def input(dt: DecisionTreeRegressor, dataset: Dataset[_]): Input = {
     dt.transformSchema(dataset.schema)
-    val categorical = MetadataUtils.getCategoricalFeatures(dataset.schema(dt.getFeaturesCol))
-    val instances = dataset.select(
-      DatasetUtils.checkRegressionLabels(dt.getLabelCol),
-      DatasetUtils.checkNonNegativeWeights(dt.get(dt.weightCol)),
-      DatasetUtils.checkNonNanVectors(dt.getFeaturesCol))
+    val featuresField = dataset.schema(dt.getFeaturesCol)
+    val label = DatasetUtils.checkRegressionLabels(dt.getLabelCol)
+    val weight = DatasetUtils.checkNonNegativeWeights(dt.get(dt.weightCol))
+    val instances = dataset.select(label, weight, DatasetUtils.checkNonNanVectors(dt.getFeaturesCol))
       .rdd.map { case Row(l: Double, w: Double, v: Vector) => Instance(l, w, v) }
-    val strategy = dt.getOldStrategy(categorical)
-    val metadata = DecisionTreeMetadata.buildMetadata(instances, strategy, numTrees = 1,
+    val size = AttributeGroup.fromStructField(featuresField).size
+    val labels =
+      if (size < 0) instances
+      else {
+        val empty = Vectors.sparse(size, Array.emptyIntArray, Array.emptyDoubleArray)
+        dataset.select(label, weight).rdd.map { case Row(l: Double, w: Double) => Instance(l, w, empty) }
+      }
+    val strategy = dt.getOldStrategy(MetadataUtils.getCategoricalFeatures(featuresField))
+    val metadata = DecisionTreeMetadata.buildMetadata(labels, strategy, numTrees = 1,
       featureSubsetStrategy = "all")
-    val splits = RandomForest.findSplits(instances, metadata, dt.getSeed)
-    new Binned(TreePoint.convertToTreeRDD(instances, splits, metadata), strategy, metadata, splits)
+    val numFeatures = metadata.numFeatures
+    new Input(instances.map { row =>
+      require(row.features.size == numFeatures,
+        s"a features vector has size ${row.features.size}, but its column's metadata says $numFeatures")
+      row
+    }, strategy, metadata, dt.getSeed)
   }
 
   /** `stats` is VarianceCalculator's (count, Σy, Σy²) over unit-weight

@@ -18,73 +18,53 @@ import org.apache.spark.sql.types._
   * validation error messages. */
 class DecisionTreeSpec extends SparkSpec {
 
-  private val csvSchema = StructType(Seq(
-    StructField("dofM", IntegerType), StructField("dofW", IntegerType),
-    StructField("carrier", DoubleType), StructField("tailNum", StringType),
-    StructField("flightNum", IntegerType), StructField("originId", IntegerType),
-    StructField("origin", StringType), StructField("destId", IntegerType),
-    StructField("dest", StringType), StructField("scheduleDepTime", DoubleType),
-    StructField("deptime", DoubleType), StructField("depDelayMins", DoubleType),
-    StructField("scheduledArrTime", DoubleType), StructField("arrTime", DoubleType),
-    StructField("arrDelay", DoubleType), StructField("elapsedTime", DoubleType),
-    StructField("distance", IntegerType)))
+  private lazy val flights: DataFrame = FlightCsv.trainingFrame(spark)
 
-  /** Training frame mirroring the reference test's getInputData:
-    * dofM/dofW shifted to 0-based, delayed = depDelayMins > 40. Read
-    * from [[FlightCsv]]: the reference's CSV where present, else a
-    * generated one in its layout. */
-  private lazy val flights: DataFrame =
-    spark.read.schema(csvSchema)
-      .csv(FlightCsv.path(spark))
-      .withColumn("dofM", col("dofM") - 1)
-      .withColumn("dofW", col("dofW") - 1)
-      .withColumn("delayed", when(col("depDelayMins") > 40, 1.0).otherwise(0.0))
+  private val featureList = FlightCsv.featureList
 
-  private val featureList =
-    Seq("dofM", "dofW", "carrier", "originId", "destId", "scheduleDepTime",
-      "scheduledArrTime", "elapsedTime")
-
-  private val trainSpec = FeatureSpec(
-    include = Some(featureList), labelField = "delayed",
-    cardinality = FeatureSpec.parseCardinality("dofW:7"))
+  private val trainSpec = FlightCsv.trainSpec
 
   test("flight-delay train + predict reproduces the reference's labels") {
     assume(FlightCsv.referencePresent, s"reference CSV absent: ${FlightCsv.Reference}")
-    val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-flight").toString
-    DecisionTree.train(flights, trainSpec, modelPath, maxDepth = 9, maxBins = 100)
-    val model = DecisionTree.load(spark, modelPath)
+    withTempDir("graft-dt-flight") { dir =>
+      val modelPath = dir.toString
+      DecisionTree.train(flights, trainSpec, modelPath, maxDepth = 9, maxBins = 100)
+      val model = DecisionTree.load(spark, modelPath)
 
-    // the 6 held-out flights from DecisionTreeRegressionTest.java:192-203
-    import spark.implicits._
-    val toScore = Seq(
-      (3, 5, 1.0, 12478, 12892, 900.0, 1225.0, 385.0),
-      (24, 5, 2.0, 10397, 12953, 1150.0, 1359.0, 129.0),
-      (3, 5, 3.0, 13930, 13198, 2030.0, 2205.0, 95.0),
-      (28, 2, 1.0, 12892, 11298, 1025.0, 1530.0, 185.0),
-      (1, 3, 4.0, 13930, 11433, 1641.0, 1905.0, 84.0),
-      (1, 3, 4.0, 10397, 15376, 1855.0, 2108.0, 253.0))
-      .toDF("dofM", "dofW", "carrier", "originId", "destId",
-        "scheduleDepTime", "scheduledArrTime", "elapsedTime")
-    val predicted = DecisionTree.predict(toScore, model,
-      trainSpec.copy(labelField = "unused"), "delayed")
-      .select("carrier", "originId", "delayed").collect()
-      .map(r => (r.getDouble(0), r.getInt(1)) -> r.getDouble(2)).toMap
+      // the 6 held-out flights from DecisionTreeRegressionTest.java:192-203
+      import spark.implicits._
+      val toScore = Seq(
+        (3, 5, 1.0, 12478, 12892, 900.0, 1225.0, 385.0),
+        (24, 5, 2.0, 10397, 12953, 1150.0, 1359.0, 129.0),
+        (3, 5, 3.0, 13930, 13198, 2030.0, 2205.0, 95.0),
+        (28, 2, 1.0, 12892, 11298, 1025.0, 1530.0, 185.0),
+        (1, 3, 4.0, 13930, 11433, 1641.0, 1905.0, 84.0),
+        (1, 3, 4.0, 10397, 15376, 1855.0, 2108.0, 253.0))
+        .toDF("dofM", "dofW", "carrier", "originId", "destId",
+          "scheduleDepTime", "scheduledArrTime", "elapsedTime")
+      val predicted = DecisionTree.predict(toScore, model,
+        trainSpec.copy(labelField = "unused"), "delayed")
+        .select("carrier", "originId", "delayed").collect()
+        .map(r => (r.getDouble(0), r.getInt(1)) -> r.getDouble(2)).toMap
 
-    // expected labels from DecisionTreeRegressionTest.java:221-233
-    val expected = Map(
-      (1.0, 12478) -> 1.0, (2.0, 10397) -> 0.0, (3.0, 13930) -> 1.0,
-      (1.0, 12892) -> 0.0, (4.0, 13930) -> 1.0, (4.0, 10397) -> 1.0)
-    expected.foreach { case (k, v) =>
-      assert(predicted(k) == v, s"flight $k: predicted ${predicted(k)}, expected $v")
+      // expected labels from DecisionTreeRegressionTest.java:221-233
+      val expected = Map(
+        (1.0, 12478) -> 1.0, (2.0, 10397) -> 0.0, (3.0, 13930) -> 1.0,
+        (1.0, 12892) -> 0.0, (4.0, 13930) -> 1.0, (4.0, 10397) -> 1.0)
+      expected.foreach { case (k, v) =>
+        assert(predicted(k) == v, s"flight $k: predicted ${predicted(k)}, expected $v")
+      }
     }
   }
 
   test("rows with null label are dropped before training") {
     val withNulls = flights.withColumn("delayed",
       when(col("flightNum") % 7 === 0, lit(null).cast("double")).otherwise(col("delayed")))
-    val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-null").toString
-    // must not throw despite null labels
-    DecisionTree.train(withNulls, trainSpec, modelPath, maxDepth = 3)
+    withTempDir("graft-dt-null") { dir =>
+      val modelPath = dir.toString
+      // must not throw despite null labels
+      DecisionTree.train(withNulls, trainSpec, modelPath, maxDepth = 3)
+    }
   }
 
   test("null feature values become absent sparse-vector slots, not zeros") {
@@ -151,66 +131,70 @@ class DecisionTreeSpec extends SparkSpec {
   test("predict equals MLlib transform on nulls, NaN and out-of-range categories") {
     import org.apache.spark.ml.param.ParamMap
     import org.apache.spark.ml.tree.{CategoricalSplit, InternalNode, Node}
-    val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-edge").toString
-    DecisionTree.train(syntheticFlights(4000), trainSpec, modelPath, maxDepth = 9, maxBins = 100)
-    val model = DecisionTree.load(spark, modelPath)
-    def catSplits(n: Node): Seq[CategoricalSplit] = n match {
-      case i: InternalNode =>
-        (i.split match { case c: CategoricalSplit => Seq(c); case _ => Nil }) ++
-          catSplits(i.leftChild) ++ catSplits(i.rightChild)
-      case _ => Nil
-    }
-    val sides = catSplits(model.rootNode).map(c => c.leftCategories.length <= c.numCategories / 2)
-    assert(sides.contains(true) && sides.contains(false), s"categorical split sides: $sides")
-
-    val toScore = edgeRows(1200)
-    val spec = trainSpec.copy(labelField = "unused")
-    val reference = model.copy(ParamMap.empty).setPredictionCol("p")
-      .transform(FeatureVectorizer.assemble(toScore, spec))
-      .drop(FeatureVectorizer.FeaturesCol)
-    def check(): Unit = {
-      val got = DecisionTree.predict(toScore, model, spec, "p")
-      assert(got.schema == reference.schema)
-      val g = got.orderBy("id").collect()
-      val r = reference.orderBy("id").collect()
-      assert(g.length == 1200 && g.length == r.length)
-      def bits(row: org.apache.spark.sql.Row) = row.toSeq.map {
-        case d: Double => java.lang.Double.doubleToRawLongBits(d)
-        case o => o
+    withTempDir("graft-dt-edge") { dir =>
+      val modelPath = dir.toString
+      DecisionTree.train(syntheticFlights(4000), trainSpec, modelPath, maxDepth = 9, maxBins = 100)
+      val model = DecisionTree.load(spark, modelPath)
+      def catSplits(n: Node): Seq[CategoricalSplit] = n match {
+        case i: InternalNode =>
+          (i.split match { case c: CategoricalSplit => Seq(c); case _ => Nil }) ++
+            catSplits(i.leftChild) ++ catSplits(i.rightChild)
+        case _ => Nil
       }
-      g.zip(r).foreach { case (a, b) => assert(bits(a) == bits(b), s"row $a vs $b") }
+      val sides = catSplits(model.rootNode).map(c => c.leftCategories.length <= c.numCategories / 2)
+      assert(sides.contains(true) && sides.contains(false), s"categorical split sides: $sides")
+
+      val toScore = edgeRows(1200)
+      val spec = trainSpec.copy(labelField = "unused")
+      val reference = model.copy(ParamMap.empty).setPredictionCol("p")
+        .transform(FeatureVectorizer.assemble(toScore, spec))
+        .drop(FeatureVectorizer.FeaturesCol)
+      def check(): Unit = {
+        val got = DecisionTree.predict(toScore, model, spec, "p")
+        assert(got.schema == reference.schema)
+        val g = got.orderBy("id").collect()
+        val r = reference.orderBy("id").collect()
+        assert(g.length == 1200 && g.length == r.length)
+        def bits(row: org.apache.spark.sql.Row) = row.toSeq.map {
+          case d: Double => java.lang.Double.doubleToRawLongBits(d)
+          case o => o
+        }
+        g.zip(r).foreach { case (a, b) => assert(bits(a) == bits(b), s"row $a vs $b") }
+      }
+      check()
+      withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(check())
     }
-    check()
-    withConf("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(check())
   }
 
   test("predict leaves the model unchanged and concurrent calls keep their own columns") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-shared").toString
-    DecisionTree.train(syntheticFlights(2000), trainSpec, modelPath, maxDepth = 5)
-    val model = DecisionTree.load(spark, modelPath)
-    val spec = trainSpec.copy(labelField = "unused")
-    val toScore = syntheticFlights(500).drop("delayed")
-    val before = model.getPredictionCol
-    val p1 = DecisionTree.predict(toScore, model, spec, "p1")
-    assert(model.getPredictionCol == before)
-    val expected = p1.select("p1").collect().map(_.getDouble(0)).sorted.toSeq
+    withTempDir("graft-dt-shared") { dir =>
+      val modelPath = dir.toString
+      DecisionTree.train(syntheticFlights(2000), trainSpec, modelPath, maxDepth = 5)
+      val model = DecisionTree.load(spark, modelPath)
+      val spec = trainSpec.copy(labelField = "unused")
+      val toScore = syntheticFlights(500).drop("delayed")
+      val before = model.getPredictionCol
+      val p1 = DecisionTree.predict(toScore, model, spec, "p1")
+      assert(model.getPredictionCol == before)
+      val expected = p1.select("p1").collect().map(_.getDouble(0)).sorted.toSeq
 
-    val fields = Seq("pa", "pb", "pc", "pd")
-    val runs = fields.map { f =>
-      Future {
-        val out = DecisionTree.predict(toScore, model, spec, f)
-        (f, out.columns.toSeq, out.select(f).collect().map(_.getDouble(0)).sorted.toSeq)
+      val fields = Seq("pa", "pb", "pc", "pd")
+      val runs = fields.map { f =>
+        Future {
+          val out = DecisionTree.predict(toScore, model, spec, f)
+          (f, out.columns.toSeq, out.select(f).collect().map(_.getDouble(0)).sorted.toSeq)
+        }
       }
+      runs.map(Await.result(_, 5.minutes)).foreach { case (f, columns, values) =>
+        assert(columns.contains(f) && fields.filterNot(_ == f).forall(o => !columns.contains(o)))
+        assert(values == expected, s"field $f")
+      }
+      assert(model.getPredictionCol == before)
     }
-    runs.map(Await.result(_, 5.minutes)).foreach { case (f, columns, values) =>
-      assert(columns.contains(f) && fields.filterNot(_ == f).forall(o => !columns.contains(o)))
-      assert(values == expected, s"field $f")
-    }
-    assert(model.getPredictionCol == before)
   }
 
   test("validation error messages mirror the reference") {
@@ -245,16 +229,18 @@ class DecisionTreeSpec extends SparkSpec {
 
   test("invalid cardinality mapping fails the training run") {
     val badSpec = trainSpec.copy(cardinality = Map("dofW" -> 2))
-    val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-bad").toString
-    val e = intercept[Exception] {
-      DecisionTree.train(flights, badSpec, modelPath, maxDepth = 9)
+    withTempDir("graft-dt-bad") { dir =>
+      val modelPath = dir.toString
+      val e = intercept[Exception] {
+        DecisionTree.train(flights, badSpec, modelPath, maxDepth = 9)
+      }
+      // MLlib rejects dofW values outside the declared 0..1 categories
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toList
+      assert(causes.exists {
+        case c: IllegalArgumentException => c.getMessage.contains("is categorical with values in")
+        case _ => false
+      }, s"cause chain: ${causes.mkString(" <- ")}")
     }
-    // MLlib rejects dofW values outside the declared 0..1 categories
-    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toList
-    assert(causes.exists {
-      case c: IllegalArgumentException => c.getMessage.contains("is categorical with values in")
-      case _ => false
-    }, s"cause chain: ${causes.mkString(" <- ")}")
   }
 
   test("hyphenated field names sanitize to underscores") {
@@ -284,18 +270,20 @@ class DecisionTreeSpec extends SparkSpec {
       include = Some(featureList.map(c => if (c == "dofW") "day-of-week" else c)),
       labelField = "is-delayed",
       cardinality = FeatureSpec.parseCardinality("day-of-week:7"))
-    val modelPath = java.nio.file.Files.createTempDirectory("graft-dt-hyphen").toString
-    DecisionTree.train(hyphenated, spec, modelPath, maxDepth = 3)
-    val model = DecisionTree.load(spark, modelPath)
-    val scored = DecisionTree.predict(
-      hyphenated.drop("is-delayed"), model, spec.copy(labelField = "unused"), "pred")
-    assert(scored.filter(col("pred").isNotNull).count() == flights.count())
-    // the scored frame keeps the (sanitized) feature column
-    assert(scored.columns.contains("day_of_week"))
+    withTempDir("graft-dt-hyphen") { dir =>
+      val modelPath = dir.toString
+      DecisionTree.train(hyphenated, spec, modelPath, maxDepth = 3)
+      val model = DecisionTree.load(spark, modelPath)
+      val scored = DecisionTree.predict(
+        hyphenated.drop("is-delayed"), model, spec.copy(labelField = "unused"), "pred")
+      assert(scored.filter(col("pred").isNotNull).count() == flights.count())
+      // the scored frame keeps the (sanitized) feature column
+      assert(scored.columns.contains("day_of_week"))
+    }
   }
 
-  /** The branch named in the fit's job description while `fit` runs. */
-  private def fitBranch(fit: => Unit): String = {
+  /** The fit's job description (branch, tier, cells) while `fit` runs. */
+  private def fitDescription(fit: => Unit): String = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -308,7 +296,7 @@ class DecisionTreeSpec extends SparkSpec {
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
       assert(!seen.isEmpty, "no job carried the fit's description")
-      "branch=(\\w+)".r.findFirstMatchIn(seen.peek()).map(_.group(1)).getOrElse(seen.peek())
+      seen.peek()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -355,17 +343,18 @@ class DecisionTreeSpec extends SparkSpec {
       .setLabelCol(spec.sanitizedLabel).setSeed(42L).fit(assembled)
 
   /** Fits through `DecisionTree.trainWithCellLimit` into a temp dir it
-    * deletes; returns the model and the branch its job description names. */
+    * deletes; returns the model and its fit's job description. */
   private def fitWithLimit(assembled: DataFrame, spec: FeatureSpec, depth: Int,
-                           maxCells: Int => Int): (DecisionTreeRegressionModel, String) = {
+                           rawCells: Int => Int = Cells.rawLimit,
+                           binnedCells: Int => Int = Cells.binnedLimit): (DecisionTreeRegressionModel, String) = {
     var model: DecisionTreeRegressionModel = null
-    val branch = fitBranch {
-      val dir = java.nio.file.Files.createTempDirectory("graft-dt-branch")
-      try model = DecisionTree.trainWithCellLimit(assembled, spec, dir.toString, depth,
-        DecisionTree.DefaultMaxBins, maxCells)
-      finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    val description = fitDescription {
+      withTempDir("graft-dt-branch") { dir =>
+        model = DecisionTree.trainWithCellLimit(assembled, spec, dir.toString, depth,
+          DecisionTree.DefaultMaxBins, rawCells, binnedCells)
+      }
     }
-    (model, branch)
+    (model, description)
   }
 
   private def features(assembled: DataFrame): Seq[Vector] =
@@ -386,8 +375,8 @@ class DecisionTreeSpec extends SparkSpec {
       ("synthetic flights", syntheticFlights(4000), trainSpec, 9))
     frames.foreach { case (name, df, spec, depth) =>
       val assembled = FeatureVectorizer.assemble(df.filter(col(spec.labelField).isNotNull), spec)
-      val (driver, branch) = fitWithLimit(assembled, spec, depth, Cells.limit)
-      assert(branch == "driver", name)
+      val (driver, description) = fitWithLimit(assembled, spec, depth)
+      assert(description.contains("branch=driver tier=raw"), s"$name: $description")
       val mllib = mllibFit(assembled, spec, depth)
       assert(driver.numNodes == mllib.numNodes && driver.numNodes > 1, name)
       val ties = assertSameTree(driver.rootNode, mllib.rootNode, features(assembled), s"$name root")
@@ -400,13 +389,22 @@ class DecisionTreeSpec extends SparkSpec {
       assert(p(0).length == p(1).length)
       p(0).zip(p(1)).foreach { case (a, b) => assert(close(a, b), s"$name: $a vs $b") }
     }
-    // past the limit the fit is MLlib's own
-    val assembled = FeatureVectorizer.assemble(
-      syntheticFlights(4000).filter(col("delayed").isNotNull), trainSpec)
-    val (fallback, branch) = fitWithLimit(assembled, trainSpec, 9, _ => 1)
-    assert(branch == "mllib")
-    assert(assertSameTree(fallback.rootNode, mllibFit(assembled, trainSpec, 9).rootNode,
-      features(assembled), "fallback root") == 0)
+    // past the raw limit the driver grows the tree from the binned
+    // cells, past both limits the fit is MLlib's own
+    val tiers = Seq(
+      ("synthetic flights", syntheticFlights(4000), trainSpec, 9),
+      ("ml_train_predict", Tables.lineitem(spark, Sf), lineitemSpec, 6))
+    tiers.foreach { case (name, df, spec, depth) =>
+      val assembled = FeatureVectorizer.assemble(df.filter(col(spec.labelField).isNotNull), spec)
+      val expected = mllibFit(assembled, spec, depth)
+      val rows = features(assembled)
+      val (binned, viaBinned) = fitWithLimit(assembled, spec, depth, rawCells = _ => 1)
+      assert(viaBinned.contains("branch=driver tier=binned"), s"$name: $viaBinned")
+      assertSameTree(binned.rootNode, expected.rootNode, rows, s"$name binned root")
+      val (fallback, viaMllib) = fitWithLimit(assembled, spec, depth, _ => 1, _ => 1)
+      assert(viaMllib.contains("branch=mllib"), s"$name: $viaMllib")
+      assert(assertSameTree(fallback.rootNode, expected.rootNode, rows, s"$name fallback root") == 0)
+    }
   }
 
   test("a cell table stays within its heap budget; a wide frame past it takes MLlib's fit") {
@@ -416,33 +414,69 @@ class DecisionTreeSpec extends SparkSpec {
       .asInstanceOf[com.sun.management.ThreadMXBean]
     val thread = Thread.currentThread().getId
     assume(threads.getThreadAllocatedBytes(thread) >= 0, "no per-thread allocation counter")
-    for (nf <- Seq(1, 2, 3, 8, 100, 1000)) {
-      val limit = Cells.limit(nf)
-      def key(c: Int) = { val k = new Array[Int](nf); k(0) = c; new ArraySeq.ofInt(k) }
+    // a key maker that takes the cell number unboxed, as an `Int => K`
+    // would not: the boxes would count as the table's heap
+    trait Key[K] { def apply(c: Int): K }
+    def fill[K](kind: String, nf: Int, limit: Int, key: Key[K]): Unit = {
       val before = threads.getThreadAllocatedBytes(thread)
-      val t = new Cells(limit)
+      val t = new Cells[K](limit)
       var c = 0
       while (c < limit) { t.add(key(c), 1.0, c.toDouble, 1.0); c += 1 }
       val heap = threads.getThreadAllocatedBytes(thread) - before
       t.add(key(0), 1.0, 0.0, 0.0)
-      assert(!t.overflow && t.size == limit, s"$nf features")
-      info(s"$nf features: $limit cells, ${heap >> 10} KiB of ${Cells.Budget >> 10}")
-      assert(heap <= Cells.Budget, s"$nf features")
+      assert(!t.overflow && t.size == limit, s"$kind, $nf features")
+      info(s"$kind, $nf features: $limit cells, ${heap >> 10} KiB of ${Cells.Budget >> 10}")
+      assert(heap <= Cells.Budget, s"$kind, $nf features")
       t.add(key(limit), 1.0, 0.0, 0.0)
-      assert(t.overflow, s"$nf features")
+      assert(t.overflow, s"$kind, $nf features")
+    }
+    for (nf <- Seq(1, 2, 3, 8, 100, 1000)) {
+      fill[ArraySeq.ofInt]("bins", nf, Cells.binnedLimit(nf),
+        c => { val k = new Array[Int](nf); k(0) = c; new ArraySeq.ofInt(k) })
+      fill[ArraySeq.ofLong]("raw", nf, Cells.rawLimit(nf),
+        c => { val k = new Array[Long](nf); k(0) = c; new ArraySeq.ofLong(k) })
     }
     // every column a feature: 400 continuous features, each row its own
-    // cell, more rows than the 400-feature limit
+    // cell, more rows than either 400-feature limit
     val width = 400
-    val rows = Cells.limit(width) + 2000
+    val rows = Cells.binnedLimit(width) + 2000
     val wide = spark.range(rows).select(
       (col("id") % 7).cast("double").as("y") +:
         (0 until width).map(f => (abs(xxhash64(col("id"), lit(f))) % 1000).cast("double").as(s"f$f")): _*)
     val spec = FeatureSpec(labelField = "y")
     val assembled = FeatureVectorizer.assemble(wide, spec)
-    val (model, branch) = fitWithLimit(assembled, spec, 2, Cells.limit)
-    assert(branch == "mllib")
+    val (model, description) = fitWithLimit(assembled, spec, 2)
+    assert(description.contains("branch=mllib"), description)
     assert(model.numFeatures == width && model.numNodes > 1)
+  }
+
+  test("a 400-feature frame assembles and scores in whole-stage codegen as MLlib does") {
+    import org.apache.spark.ml.feature.VectorAssembler
+    val width = 400
+    val cols = (0 until width).map(f => s"f$f")
+    // a narrow output over `range`, so each projection compiles into one
+    // whole-stage method: without split methods it passes 64 KB
+    val wide = spark.range(0, 3000, 1, 4).select(
+      (col("id") % 7).cast("double").as("y") +:
+        cols.zipWithIndex.map { case (c, f) => (abs(xxhash64(col("id"), lit(f))) % 5).cast("double").as(c) }: _*)
+    val spec = FeatureSpec(include = Some(cols), labelField = "y")
+    withConf("spark.sql.codegen.fallback" -> "false") {
+      val assembled = FeatureVectorizer.assemble(wide, spec)
+      val vectors = new VectorAssembler().setInputCols(cols.toArray).setOutputCol("v")
+        .transform(assembled).select(FeatureVectorizer.FeaturesCol, "v").collect()
+      assert(vectors.length == 3000)
+      vectors.foreach(r => assert(r.getAs[Vector](0).toArray.sameElements(r.getAs[Vector](1).toArray), s"$r"))
+      withTempDir("graft-dt-wide") { dir =>
+        val model = DecisionTree.train(wide, spec, dir.toString, maxDepth = 4)
+        assert(model.numFeatures == width && model.numNodes > 1)
+        val scored = model.copy(org.apache.spark.ml.param.ParamMap.empty).setPredictionCol("q")
+          .transform(DecisionTree.predict(assembled, model, spec.copy(labelField = "unused"), "p"))
+          .select("p", "q").collect()
+        assert(scored.length == 3000)
+        scored.foreach(r => assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), s"$r"))
+      }
+    }
   }
 
   test("a NaN label fails the fit with MLlib's label check") {

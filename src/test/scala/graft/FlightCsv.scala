@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.ml.FeatureSpec
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The flight-delay training CSV the reference plugin's tests read
   * (headerless, 17 columns in the reference's `trainData.csv` layout).
@@ -19,6 +21,35 @@ object FlightCsv {
   def referencePresent: Boolean = Files.exists(Reference)
 
   private val Rows = 5000
+
+  private val schema = StructType(Seq(
+    StructField("dofM", IntegerType), StructField("dofW", IntegerType),
+    StructField("carrier", DoubleType), StructField("tailNum", StringType),
+    StructField("flightNum", IntegerType), StructField("originId", IntegerType),
+    StructField("origin", StringType), StructField("destId", IntegerType),
+    StructField("dest", StringType), StructField("scheduleDepTime", DoubleType),
+    StructField("deptime", DoubleType), StructField("depDelayMins", DoubleType),
+    StructField("scheduledArrTime", DoubleType), StructField("arrTime", DoubleType),
+    StructField("arrDelay", DoubleType), StructField("elapsedTime", DoubleType),
+    StructField("distance", IntegerType)))
+
+  /** Training frame mirroring the reference test's getInputData:
+    * dofM/dofW shifted to 0-based, delayed = depDelayMins > 40. */
+  def trainingFrame(spark: SparkSession): DataFrame =
+    spark.read.schema(schema)
+      .csv(path(spark))
+      .withColumn("dofM", col("dofM") - 1)
+      .withColumn("dofW", col("dofW") - 1)
+      .withColumn("delayed", when(col("depDelayMins") > 40, 1.0).otherwise(0.0))
+
+  val featureList: Seq[String] =
+    Seq("dofM", "dofW", "carrier", "originId", "destId", "scheduleDepTime",
+      "scheduledArrTime", "elapsedTime")
+
+  /** The reference test's trainer config: dofW categorical with 7 values. */
+  val trainSpec: FeatureSpec = FeatureSpec(
+    include = Some(featureList), labelField = "delayed",
+    cardinality = FeatureSpec.parseCardinality("dofW:7"))
 
   private var generated: Option[String] = None
 

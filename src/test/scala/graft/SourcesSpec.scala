@@ -17,40 +17,45 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("json-lines reader with schema routes corrupt records instead of failing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-json").toFile
-    val f = new java.io.File(dir, "data.json")
-    java.nio.file.Files.writeString(f.toPath,
-      """{"id": 1, "name": "ok"}
-        |not json at all
-        |{"id": 2, "name": "also ok"}
-        |""".stripMargin)
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("name", StringType),
-      StructField("_corrupt_record", StringType)))
-    val rows = Sources.jsonLines(spark, f.toString, schema).collect()
-    assert(rows.length == 3)
-    assert(rows.count(_.getAs[String]("_corrupt_record") != null) == 1)
+    withTempDir("graft-json") { dir =>
+      val f = new java.io.File(dir.toFile, "data.json")
+      java.nio.file.Files.writeString(f.toPath,
+        """{"id": 1, "name": "ok"}
+          |not json at all
+          |{"id": 2, "name": "also ok"}
+          |""".stripMargin)
+      val schema = StructType(Seq(
+        StructField("id", LongType), StructField("name", StringType),
+        StructField("_corrupt_record", StringType)))
+      val rows = Sources.jsonLines(spark, f.toString, schema).collect()
+      assert(rows.length == 3)
+      assert(rows.count(_.getAs[String]("_corrupt_record") != null) == 1)
+    }
   }
 
   test("orc sink round-trips with pushed filters") {
-    val out = java.nio.file.Files.createTempDirectory("graft-orc").toString + "/t"
-    Sources.writeOrc(Tables.nation(spark, Sf), out)
-    val back = Sources.orc(spark, out)
-    assert(back.count() == 25)
-    val filtered = back.filter(col("n_nationkey") === 3).select("n_name")
-    filtered.collect()
-    val scan = filtered.queryExecution.executedPlan.toString
-    assert(scan.contains("PushedFilters: [IsNotNull(n_nationkey), EqualTo(n_nationkey,3)]"), scan)
+    withTempDir("graft-orc") { dir =>
+      val out = dir.toString + "/t"
+      Sources.writeOrc(Tables.nation(spark, Sf), out)
+      val back = Sources.orc(spark, out)
+      assert(back.count() == 25)
+      val filtered = back.filter(col("n_nationkey") === 3).select("n_name")
+      filtered.collect()
+      val scan = filtered.queryExecution.executedPlan.toString
+      assert(scan.contains("PushedFilters: [IsNotNull(n_nationkey), EqualTo(n_nationkey,3)]"), scan)
+    }
   }
 
   test("parquet sink round-trips with partition pruning") {
-    val out = java.nio.file.Files.createTempDirectory("graft-pq").toString + "/t"
-    Sources.writeParquet(Tables.nation(spark, Sf), out, partitionBy = Seq("n_regionkey"))
-    val back = Sources.parquet(spark, out)
-    assert(back.count() == 25)
-    // partition filter prunes directories, not rows
-    val pruned = back.filter(col("n_regionkey") === 0)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(n_regionkey"), plan)
+    withTempDir("graft-pq") { dir =>
+      val out = dir.toString + "/t"
+      Sources.writeParquet(Tables.nation(spark, Sf), out, partitionBy = Seq("n_regionkey"))
+      val back = Sources.parquet(spark, out)
+      assert(back.count() == 25)
+      // partition filter prunes directories, not rows
+      val pruned = back.filter(col("n_regionkey") === 0)
+      val plan = pruned.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [isnotnull(n_regionkey"), plan)
+    }
   }
 }

@@ -23,6 +23,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Run `body` with a fresh temp dir named after `prefix`, deleted
+    * afterwards. */
+  def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   override def afterAll(): Unit = () // session shared across suites
 }
 
