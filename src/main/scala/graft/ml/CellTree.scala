@@ -10,8 +10,10 @@ import org.apache.spark.ml.tree.impl.GraftTreeBridge
   * `(count, Σy, Σy²)`: the layout of MLlib's `VarianceAggregator`
   * stats, which is all a variance-impurity tree needs from its rows.
   * A key is a row's raw feature values (as bits, so 0.0 and -0.0 stay
-  * apart) or its bin tuple. Adding a cell past `limit` sets `overflow`
-  * and drops the table, so a table never holds more than `limit` cells. */
+  * apart) or, on the driver, the bin tuple they fall in, which merges
+  * raw cells and so never needs more of them. Adding a cell past `limit`
+  * sets `overflow` and drops the table, so a table never holds more than
+  * `limit` cells. */
 private[graft] final class Cells[K](val limit: Int) extends Serializable {
   private var table = mutable.HashMap.empty[K, Array[Double]]
 
@@ -47,26 +49,19 @@ private[graft] object Cells {
   val Budget: Long = 16L << 20
 
   /** The most cells a table over `numFeatures` features, keyed by
-    * `keyBytes` B per feature, holds within [[Budget]]. A cell takes
-    * 136 B plus its key's elements, with compressed references: the map
-    * entry (32 B), the key wrapper (16 B), the key array's header (16 B,
-    * and padding to 8 B), the stats (40 B), and its share of the slot
-    * array and of the one a resize replaced (up to 16 B together),
-    * rounded up. */
-  def limit(numFeatures: Int, keyBytes: Int): Int = (Budget / (136L + keyBytes.toLong * numFeatures)).toInt
-
-  /** Raw-value keys (8 B a feature): 116,508 cells at one feature,
-    * 17,924 at 100. */
-  val rawLimit: Int => Int = limit(_, 8)
-
-  /** Bin-tuple keys (4 B a feature): 119,837 cells at one feature,
-    * 31,300 at 100. */
-  val binnedLimit: Int => Int = limit(_, 4)
+    * their raw values (8 B a feature), holds within [[Budget]]: 116,508
+    * cells at one feature, 17,924 at 100. A cell takes 136 B plus its
+    * key's elements, with compressed references: the map entry (32 B),
+    * the key wrapper (16 B), the key array's header (16 B, and padding
+    * to 8 B), the stats (40 B), and its share of the slot array and of
+    * the one a resize replaced (up to 16 B together), rounded up. */
+  def limit(numFeatures: Int): Int = (Budget / (136L + 8L * numFeatures)).toInt
 }
 
 /** Grows, on the driver, the tree MLlib's `RandomForest` grows for a
-  * single variance-impurity regressor, from the [[Cells]] of its binned
-  * rows instead of one pass over the rows per level. Each node's split
+  * single variance-impurity regressor, from the [[Cells]] of its rows
+  * keyed by bin tuple (its raw cells binned with MLlib's splits) instead
+  * of one pass over the rows per level. Each node's split
   * depends only on the cells that reach it, so nodes are grown depth
   * first over one index array, partitioned in place per split; the
   * result is the level-wise tree. The split choice mirrors

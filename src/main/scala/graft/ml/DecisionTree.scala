@@ -31,11 +31,10 @@ import org.apache.spark.sql.functions._
   * While the cells fit a fixed heap budget ([[Cells]], 16 MB: 116,508
   * cells at one feature, 17,924 at 100) the driver bins them with
   * MLlib's splits and grows the tree from them, at a cost per cell,
-  * not per row. Past it a second scan reduces the binned rows, whose
-  * cells ≤ ∏ bins per feature, within the same budget. Past that too
-  * (at 100 TB with several continuous features, say) MLlib's
-  * level-wise fit runs: one distributed pass per level, its memory
-  * maxBins × features × nodes per level, not data size.
+  * not per row. Past it (at 100 TB with several continuous features,
+  * say) MLlib's level-wise fit runs on the same metadata and splits:
+  * one distributed pass per level, its memory maxBins × features ×
+  * nodes per level, not data size.
   */
 object DecisionTree {
 
@@ -43,8 +42,9 @@ object DecisionTree {
   val DefaultMaxBins = 100
   private val Impurity = "variance"
 
-  /** Drop null-label rows, assemble null-safe sparse features, fit,
-    * save. Returns the fitted model (also persisted at `modelPath`). */
+  /** Assemble null-safe sparse features, drop null-label rows, fit,
+    * save ([[trainAssembled]]). Returns the fitted model (also persisted
+    * at `modelPath`). */
   def train(df: DataFrame, spec: FeatureSpec, modelPath: String,
             maxDepth: Int = DefaultMaxDepth, maxBins: Int = DefaultMaxBins): DecisionTreeRegressionModel = {
     spec.validateLabel(df.schema)
@@ -53,8 +53,7 @@ object DecisionTree {
     // label column only), and a DataFrame-level persist added
     // materialization cost (measured +0.6 s at sf0.1 under MLlib's
     // level-wise fit, which caches its own binned points).
-    trainAssembled(FeatureVectorizer.assemble(
-      df.filter(col(spec.labelField).isNotNull), spec), spec, modelPath, maxDepth, maxBins)
+    trainAssembled(FeatureVectorizer.assemble(df, spec), spec, modelPath, maxDepth, maxBins)
   }
 
   /** Fit + save over an ALREADY-assembled frame (the null-label drop
@@ -68,28 +67,25 @@ object DecisionTree {
     * so the driver finds MLlib's split candidates from them, and reduces
     * the rows to (count, Σy, Σy²) per distinct raw feature tuple
     * ("cell"). A variance-impurity tree needs nothing else from its
-    * rows, so when the cells fit [[Cells.rawLimit]] for the feature
-    * count the driver bins them as MLlib bins a row and grows the tree
-    * from them ([[CellTree]]), with MLlib's splits, gain rule, tie order
-    * and pruning, instead of MLlib's one pass over every row per level.
-    * Past that limit a second aggregate reduces the binned rows, each
-    * task stopping once its table passes [[Cells.binnedLimit]]; past
-    * that too MLlib's level-wise fit runs on the same metadata and
+    * rows, so when the cells fit [[Cells.limit]] for the feature count
+    * the driver bins them as MLlib bins a row and grows the tree from
+    * them ([[CellTree]]), with MLlib's splits, gain rule, tie order and
+    * pruning, instead of MLlib's one pass over every row per level. Past
+    * that limit MLlib's level-wise fit runs on the same metadata and
     * splits (`RandomForest.runBagged`, what `DecisionTreeRegressor.fit`
     * runs after those jobs). The branch taken (`driver` or `mllib`),
-    * with the tier whose cells it grew from (`raw` or `binned`), the
-    * cell count and the limits, is the Spark job description of the
-    * jobs that follow the decision (the fit's rest and the save). */
+    * with the cell count and the limit, is the Spark job description of
+    * the jobs that follow the decision (the fit's rest and the save). */
   def trainAssembled(assembled: DataFrame, spec0: FeatureSpec, modelPath: String,
                      maxDepth: Int = DefaultMaxDepth,
                      maxBins: Int = DefaultMaxBins): DecisionTreeRegressionModel =
-    trainWithCellLimit(assembled, spec0, modelPath, maxDepth, maxBins, Cells.rawLimit, Cells.binnedLimit)
+    trainWithCellLimit(assembled, spec0, modelPath, maxDepth, maxBins, Cells.limit)
 
-  /** [[trainAssembled]] with each tier's cell limit given as a function
-    * of the feature count. */
+  /** [[trainAssembled]] with the cell limit given as a function of the
+    * feature count. */
   private[graft] def trainWithCellLimit(assembled: DataFrame, spec0: FeatureSpec, modelPath: String,
-                                        maxDepth: Int, maxBins: Int, rawCells: Int => Int,
-                                        binnedCells: Int => Int): DecisionTreeRegressionModel = {
+                                        maxDepth: Int, maxBins: Int,
+                                        cellLimit: Int => Int): DecisionTreeRegressionModel = {
     val spec = spec0.sanitized
     val prepared = assembled.filter(col(spec.sanitizedLabel).isNotNull)
     val dt = new DecisionTreeRegressor()
@@ -102,8 +98,8 @@ object DecisionTree {
       .setSeed(42L)
     val input = GraftTreeBridge.input(dt, prepared)
     val numFeatures = input.numFeatures
-    val rawLimit = rawCells(numFeatures)
-    val (raw, splits) = input.scan[Cells[ArraySeq.ofLong]](() => new Cells(rawLimit),
+    val limit = cellLimit(numFeatures)
+    val (raw, splits) = input.scan[Cells[ArraySeq.ofLong]](() => new Cells(limit),
       (t, y, x) => {
         if (!t.overflow) {
           val key = new Array[Long](numFeatures)
@@ -115,8 +111,6 @@ object DecisionTree {
       _ merge _)
     val sc = prepared.sparkSession.sparkContext
     val description = sc.getLocalProperty("spark.job.description")
-    def grow(cells: Cells[ArraySeq.ofInt]) =
-      GraftTreeBridge.model(dt, CellTree.grow(cells, splits, input.arity, maxDepth), numFeatures)
     try {
       val model =
         if (!raw.overflow) {
@@ -126,30 +120,11 @@ object DecisionTree {
             cells.add(new ArraySeq.ofInt(bin(key.unsafeArray.map(java.lang.Double.longBitsToDouble))),
               s(0), s(1), s(2))
           }
-          sc.setJobDescription(
-            s"DecisionTree fit: branch=driver tier=raw cells=${raw.size} limit=$rawLimit")
-          grow(cells)
+          sc.setJobDescription(s"DecisionTree fit: branch=driver cells=${raw.size} limit=$limit")
+          GraftTreeBridge.model(dt, CellTree.grow(cells, splits, input.arity, maxDepth), numFeatures)
         } else {
-          val binned = input.binned(splits)
-          val limit = binnedCells(numFeatures)
-          val merge = (a: Cells[ArraySeq.ofInt], b: Cells[ArraySeq.ofInt]) => a.merge(b)
-          val cells = binned.rows.mapPartitions { rows =>
-            val t = new Cells[ArraySeq.ofInt](limit)
-            while (!t.overflow && rows.hasNext) {
-              val (key, y) = rows.next()
-              t.add(new ArraySeq.ofInt(key), 1.0, y, y * y)
-            }
-            Iterator.single(t)
-          }.treeAggregate(new Cells[ArraySeq.ofInt](limit), merge, merge, depth = 2,
-            finalAggregateOnExecutor = true)
-          if (!cells.overflow) {
-            sc.setJobDescription(s"DecisionTree fit: branch=driver tier=binned cells=${cells.size} " +
-              s"limit=$limit raw>$rawLimit")
-            grow(cells)
-          } else {
-            sc.setJobDescription(s"DecisionTree fit: branch=mllib raw>$rawLimit binned>$limit")
-            binned.fit(dt)
-          }
+          sc.setJobDescription(s"DecisionTree fit: branch=mllib cells>$limit limit=$limit")
+          input.fit(dt, splits)
         }
       model.write.overwrite().save(modelPath)
       model

@@ -121,9 +121,26 @@ object GraftTreeBridge {
       }
     }
 
-    /** The rows binned as MLlib bins them with `splits`. */
-    def binned(splits: Array[Array[Split]]): Binned =
-      new Binned(TreePoint.convertToTreeRDD(instances, splits, metadata), strategy, metadata, splits)
+    /** The model `dt.fit` returns for these rows: MLlib's level-wise fit
+      * on the rows binned with `splits`, as `RandomForest.run` calls it
+      * for one tree after the metadata and split jobs this input has
+      * already run. */
+    def fit(dt: DecisionTreeRegressor, splits: Array[Array[Split]]): DecisionTreeRegressionModel = {
+      val points = TreePoint.convertToTreeRDD(instances, splits, metadata)
+      val bcSplits = points.sparkContext.broadcast(splits)
+      val bagged = BaggedPoint.convertToBaggedRDD(points, strategy.subsamplingRate, numSubsamples = 1,
+        strategy.bootstrap, (p: TreePoint) => p.weight, dt.getSeed)
+        .persist(StorageLevel.MEMORY_AND_DISK).setName("bagged tree points")
+      try {
+        val tree = RandomForest.runBagged(bagged, metadata, bcSplits, strategy, numTrees = 1,
+          featureSubsetStrategy = "all", dt.getSeed, instr = None, prune = true,
+          parentUID = Some(dt.uid), TreeConfig.trainingEarlyStopModelSizeThresholdInBytes)
+        model(dt, tree.head.rootNode, numFeatures)
+      } finally {
+        bagged.unpersist()
+        bcSplits.destroy()
+      }
+    }
   }
 
   /** Per feature, the non-zero values of the sampled rows with their
@@ -157,36 +174,6 @@ object GraftTreeBridge {
         j += 1
       }
       this
-    }
-  }
-
-  /** A fit input as MLlib bins it, with the metadata and split
-    * candidates (`splits`, empty for a categorical feature) MLlib's fit
-    * computes for it. */
-  final class Binned private[GraftTreeBridge] (points: RDD[TreePoint], strategy: Strategy,
-                                               metadata: DecisionTreeMetadata,
-                                               splits: Array[Array[Split]]) {
-
-    /** Each row as (bin tuple, label); lazy. */
-    def rows: RDD[(Array[Int], Double)] = points.map(p => (p.binnedFeatures, p.label))
-
-    /** The model `dt.fit` returns for these rows: MLlib's level-wise fit
-      * as `RandomForest.run` calls it for one tree, after the metadata
-      * and split jobs this input has already run. */
-    def fit(dt: DecisionTreeRegressor): DecisionTreeRegressionModel = {
-      val bcSplits = points.sparkContext.broadcast(splits)
-      val bagged = BaggedPoint.convertToBaggedRDD(points, strategy.subsamplingRate, numSubsamples = 1,
-        strategy.bootstrap, (p: TreePoint) => p.weight, dt.getSeed)
-        .persist(StorageLevel.MEMORY_AND_DISK).setName("bagged tree points")
-      try {
-        val tree = RandomForest.runBagged(bagged, metadata, bcSplits, strategy, numTrees = 1,
-          featureSubsetStrategy = "all", dt.getSeed, instr = None, prune = true,
-          parentUID = Some(dt.uid), TreeConfig.trainingEarlyStopModelSizeThresholdInBytes)
-        model(dt, tree.head.rootNode, metadata.numFeatures)
-      } finally {
-        bagged.unpersist()
-        bcSplits.destroy()
-      }
     }
   }
 

@@ -195,25 +195,27 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning: dim filter prunes fact partitions at runtime") {
-    val base = java.nio.file.Files.createTempDirectory("graft-dpp").toString
-    // fact partitioned on pkey (10 directories)
-    Sources.writeParquet(
-      Tables.orders(spark, Sf).withColumn("pkey", pmod(col("o_custkey"), lit(10))),
-      s"$base/fact", partitionBy = Seq("pkey"))
-    // dim: (pkey, grp) — the selective filter is on grp, NOT pkey, so
-    // static pruning can't apply and the pkey set is only known at run
-    // time, exactly the 100 TB star-join shape DPP exists for.
-    Sources.writeParquet(
-      spark.range(10).select(col("id").as("pkey"), (col("id") % 5).as("grp")),
-      s"$base/dim")
-    val fact = Sources.parquet(spark, s"$base/fact")
-    val dim = Sources.parquet(spark, s"$base/dim").filter(col("grp") === 0)
-    val joined = fact.join(dim, "pkey").groupBy()
-      .agg(count(lit(1)).as("cnt"), round(sum("o_totalprice"), 2).as("rev"))
-    joined.collect()
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruningexpression"),
-      s"expected a runtime partition-pruning subquery in the fact scan:\n$plan")
+    withTempDir("graft-dpp") { tmp =>
+      val base = tmp.toString
+      // fact partitioned on pkey (10 directories)
+      Sources.writeParquet(
+        Tables.orders(spark, Sf).withColumn("pkey", pmod(col("o_custkey"), lit(10))),
+        s"$base/fact", partitionBy = Seq("pkey"))
+      // dim: (pkey, grp) — the selective filter is on grp, NOT pkey, so
+      // static pruning can't apply and the pkey set is only known at run
+      // time, exactly the 100 TB star-join shape DPP exists for.
+      Sources.writeParquet(
+        spark.range(10).select(col("id").as("pkey"), (col("id") % 5).as("grp")),
+        s"$base/dim")
+      val fact = Sources.parquet(spark, s"$base/fact")
+      val dim = Sources.parquet(spark, s"$base/dim").filter(col("grp") === 0)
+      val joined = fact.join(dim, "pkey").groupBy()
+        .agg(count(lit(1)).as("cnt"), round(sum("o_totalprice"), 2).as("rev"))
+      joined.collect()
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("dynamicpruningexpression"),
+        s"expected a runtime partition-pruning subquery in the fact scan:\n$plan")
+    }
   }
 
   test("persisted IVF index: identical results to the inline path, partition-pruned scan") {

@@ -4,6 +4,7 @@ import scala.collection.immutable.ArraySeq
 
 import graft.ml.{Cells, DecisionTree, FeatureSpec, FeatureVectorizer}
 import graft.operators.TextAnalysis
+import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
 import org.apache.spark.ml.tree.{CategoricalSplit, ContinuousSplit, InternalNode, LeafNode, Node, Split}
@@ -282,7 +283,7 @@ class DecisionTreeSpec extends SparkSpec {
     }
   }
 
-  /** The fit's job description (branch, tier, cells) while `fit` runs. */
+  /** The fit's job description (branch, cells) while `fit` runs. */
   private def fitDescription(fit: => Unit): String = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -345,13 +346,12 @@ class DecisionTreeSpec extends SparkSpec {
   /** Fits through `DecisionTree.trainWithCellLimit` into a temp dir it
     * deletes; returns the model and its fit's job description. */
   private def fitWithLimit(assembled: DataFrame, spec: FeatureSpec, depth: Int,
-                           rawCells: Int => Int = Cells.rawLimit,
-                           binnedCells: Int => Int = Cells.binnedLimit): (DecisionTreeRegressionModel, String) = {
+                           cells: Int => Int = Cells.limit): (DecisionTreeRegressionModel, String) = {
     var model: DecisionTreeRegressionModel = null
     val description = fitDescription {
       withTempDir("graft-dt-branch") { dir =>
         model = DecisionTree.trainWithCellLimit(assembled, spec, dir.toString, depth,
-          DecisionTree.DefaultMaxBins, rawCells, binnedCells)
+          DecisionTree.DefaultMaxBins, cells)
       }
     }
     (model, description)
@@ -376,7 +376,7 @@ class DecisionTreeSpec extends SparkSpec {
     frames.foreach { case (name, df, spec, depth) =>
       val assembled = FeatureVectorizer.assemble(df.filter(col(spec.labelField).isNotNull), spec)
       val (driver, description) = fitWithLimit(assembled, spec, depth)
-      assert(description.contains("branch=driver tier=raw"), s"$name: $description")
+      assert(description.contains("branch=driver"), s"$name: $description")
       val mllib = mllibFit(assembled, spec, depth)
       assert(driver.numNodes == mllib.numNodes && driver.numNodes > 1, name)
       val ties = assertSameTree(driver.rootNode, mllib.rootNode, features(assembled), s"$name root")
@@ -389,22 +389,31 @@ class DecisionTreeSpec extends SparkSpec {
       assert(p(0).length == p(1).length)
       p(0).zip(p(1)).foreach { case (a, b) => assert(close(a, b), s"$name: $a vs $b") }
     }
-    // past the raw limit the driver grows the tree from the binned
-    // cells, past both limits the fit is MLlib's own
-    val tiers = Seq(
+    // past the limit the fit is MLlib's own
+    val fallbacks = Seq(
       ("synthetic flights", syntheticFlights(4000), trainSpec, 9),
       ("ml_train_predict", Tables.lineitem(spark, Sf), lineitemSpec, 6))
-    tiers.foreach { case (name, df, spec, depth) =>
+    fallbacks.foreach { case (name, df, spec, depth) =>
       val assembled = FeatureVectorizer.assemble(df.filter(col(spec.labelField).isNotNull), spec)
       val expected = mllibFit(assembled, spec, depth)
-      val rows = features(assembled)
-      val (binned, viaBinned) = fitWithLimit(assembled, spec, depth, rawCells = _ => 1)
-      assert(viaBinned.contains("branch=driver tier=binned"), s"$name: $viaBinned")
-      assertSameTree(binned.rootNode, expected.rootNode, rows, s"$name binned root")
-      val (fallback, viaMllib) = fitWithLimit(assembled, spec, depth, _ => 1, _ => 1)
+      val (fallback, viaMllib) = fitWithLimit(assembled, spec, depth, _ => 1)
       assert(viaMllib.contains("branch=mllib"), s"$name: $viaMllib")
-      assert(assertSameTree(fallback.rootNode, expected.rootNode, rows, s"$name fallback root") == 0)
+      assert(assertSameTree(fallback.rootNode, expected.rootNode, features(assembled),
+        s"$name fallback root") == 0)
     }
+  }
+
+  test("a features column without attribute metadata fits the same tree") {
+    val assembled = FeatureVectorizer.assemble(Tables.lineitem(spark, Sf), lineitemSpec)
+    val stripped = assembled.withColumn(FeatureVectorizer.FeaturesCol,
+      col(FeatureVectorizer.FeaturesCol).as(FeatureVectorizer.FeaturesCol, Metadata.empty))
+    // no vector size in the metadata: the fit reads it from the rows
+    assert(AttributeGroup.fromStructField(stripped.schema(FeatureVectorizer.FeaturesCol)).size < 0)
+    val Seq(withMeta, without) = Seq(assembled, stripped).map { df =>
+      withTempDir("graft-dt-meta")(dir => DecisionTree.trainAssembled(df, lineitemSpec, dir.toString))
+    }
+    assert(without.numFeatures == withMeta.numFeatures && without.numNodes == withMeta.numNodes)
+    assert(assertSameTree(without.rootNode, withMeta.rootNode, features(assembled), "root") == 0)
   }
 
   test("a cell table stays within its heap budget; a wide frame past it takes MLlib's fit") {
@@ -414,32 +423,25 @@ class DecisionTreeSpec extends SparkSpec {
       .asInstanceOf[com.sun.management.ThreadMXBean]
     val thread = Thread.currentThread().getId
     assume(threads.getThreadAllocatedBytes(thread) >= 0, "no per-thread allocation counter")
-    // a key maker that takes the cell number unboxed, as an `Int => K`
-    // would not: the boxes would count as the table's heap
-    trait Key[K] { def apply(c: Int): K }
-    def fill[K](kind: String, nf: Int, limit: Int, key: Key[K]): Unit = {
+    for (nf <- Seq(1, 2, 3, 8, 100, 1000)) {
+      val limit = Cells.limit(nf)
+      def key(c: Int) = { val k = new Array[Long](nf); k(0) = c; new ArraySeq.ofLong(k) }
       val before = threads.getThreadAllocatedBytes(thread)
-      val t = new Cells[K](limit)
+      val t = new Cells[ArraySeq.ofLong](limit)
       var c = 0
       while (c < limit) { t.add(key(c), 1.0, c.toDouble, 1.0); c += 1 }
       val heap = threads.getThreadAllocatedBytes(thread) - before
       t.add(key(0), 1.0, 0.0, 0.0)
-      assert(!t.overflow && t.size == limit, s"$kind, $nf features")
-      info(s"$kind, $nf features: $limit cells, ${heap >> 10} KiB of ${Cells.Budget >> 10}")
-      assert(heap <= Cells.Budget, s"$kind, $nf features")
+      assert(!t.overflow && t.size == limit, s"$nf features")
+      info(s"$nf features: $limit cells, ${heap >> 10} KiB of ${Cells.Budget >> 10}")
+      assert(heap <= Cells.Budget, s"$nf features")
       t.add(key(limit), 1.0, 0.0, 0.0)
-      assert(t.overflow, s"$kind, $nf features")
-    }
-    for (nf <- Seq(1, 2, 3, 8, 100, 1000)) {
-      fill[ArraySeq.ofInt]("bins", nf, Cells.binnedLimit(nf),
-        c => { val k = new Array[Int](nf); k(0) = c; new ArraySeq.ofInt(k) })
-      fill[ArraySeq.ofLong]("raw", nf, Cells.rawLimit(nf),
-        c => { val k = new Array[Long](nf); k(0) = c; new ArraySeq.ofLong(k) })
+      assert(t.overflow, s"$nf features")
     }
     // every column a feature: 400 continuous features, each row its own
-    // cell, more rows than either 400-feature limit
+    // cell, more rows than the 400-feature limit
     val width = 400
-    val rows = Cells.binnedLimit(width) + 2000
+    val rows = Cells.limit(width) + 2000
     val wide = spark.range(rows).select(
       (col("id") % 7).cast("double").as("y") +:
         (0 until width).map(f => (abs(xxhash64(col("id"), lit(f))) % 1000).cast("double").as(s"f$f")): _*)
@@ -482,9 +484,9 @@ class DecisionTreeSpec extends SparkSpec {
   test("a NaN label fails the fit with MLlib's label check") {
     val nan = syntheticFlights(500)
       .withColumn("delayed", when(col("dofM") === 3, lit(Double.NaN)).otherwise(col("delayed")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-dt-nan")
-    val e = try intercept[Exception](DecisionTree.train(nan, trainSpec, dir.toString, maxDepth = 3))
-      finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    val e = withTempDir("graft-dt-nan") { dir =>
+      intercept[Exception](DecisionTree.train(nan, trainSpec, dir.toString, maxDepth = 3))
+    }
     val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toList
     assert(causes.exists(c => String.valueOf(c.getMessage).contains("Labels MUST NOT be Null or NaN")),
       s"cause chain: ${causes.mkString(" <- ")}")

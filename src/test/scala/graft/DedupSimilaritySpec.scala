@@ -95,43 +95,45 @@ class DedupSimilaritySpec extends SparkSpec {
     val dim = 64
     assert(math.ceil(math.log((n + 64) / 2.0) / math.log(2.0)).toInt > 12,
       "test corpus too small to engage the adaptive plane count")
-    val dir = java.nio.file.Files.createTempDirectory("graft-annadapt").toString
-    def gauss(seed: Int): Array[Double] = {
-      val r = new scala.util.Random(seed)
-      Array.fill(dim)(r.nextGaussian())
-    }
-    val vecs: Array[Array[Double]] = (0 until n).map { i =>
-      if (i >= 5000 && i < 5200) {
-        val src = gauss(i - 5000); val p = gauss(i)
-        src.zip(p).map { case (x, e) => x + 0.02 * e }
-      } else gauss(i)
-    }.toArray
-    import spark.implicits._
-    vecs.zipWithIndex
-      .map { case (v, i) => (i.toLong, v.map(_.toFloat)) }.toSeq
-      .toDF("vec_id", "embedding")
-      .repartition(8).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    withTempDir("graft-annadapt") { tmp =>
+      val dir = tmp.toString
+      def gauss(seed: Int): Array[Double] = {
+        val r = new scala.util.Random(seed)
+        Array.fill(dim)(r.nextGaussian())
+      }
+      val vecs: Array[Array[Double]] = (0 until n).map { i =>
+        if (i >= 5000 && i < 5200) {
+          val src = gauss(i - 5000); val p = gauss(i)
+          src.zip(p).map { case (x, e) => x + 0.02 * e }
+        } else gauss(i)
+      }.toArray
+      import spark.implicits._
+      vecs.zipWithIndex
+        .map { case (v, i) => (i.toLong, v.map(_.toFloat)) }.toSeq
+        .toDF("vec_id", "embedding")
+        .repartition(8).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
-    val ann = Dedup.dedupEmbeddingAnn(spark, dir, augmentPlanted = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // sampled slice: both planted families, their augmented copies, and
-    // a spread of arbitrary ids
-    val slice = ((0 until 200) ++ (5000 until 5200) ++ (0 until n by 251))
-      .map(_.toLong).toSet ++ (1000000L until 1000064L)
-    val all = Dedup.augmentedEmbeddings(spark, dir)
-    val sliceDf = all.filter(col("id").isInCollection(slice))
-      .select(col("id").as("id_a"), col("v").as("va"))
-    val exact = sliceDf.crossJoin(all.select(col("id").as("id_b"), col("v").as("vb")))
-      .filter(col("id_a") =!= col("id_b"))
-      .filter(round(graft.functions.VectorFunctions.cosine_similarity(col("va"), col("vb")), 4) >= 0.9)
-      .select(least(col("id_a"), col("id_b")).as("a"), greatest(col("id_a"), col("id_b")).as("b"))
-      .distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // both planted families must be non-trivially present
-    assert(exact.size >= 264, s"expected >=264 true slice pairs, got ${exact.size}")
-    val annSlice = ann.filter { case (a, b) => slice(a) || slice(b) }
-    assert(exact == annSlice,
-      s"adaptive-plane ANN missed ${(exact -- annSlice).size}, extra ${(annSlice -- exact).size}")
+      val ann = Dedup.dedupEmbeddingAnn(spark, dir, augmentPlanted = true)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      // sampled slice: both planted families, their augmented copies, and
+      // a spread of arbitrary ids
+      val slice = ((0 until 200) ++ (5000 until 5200) ++ (0 until n by 251))
+        .map(_.toLong).toSet ++ (1000000L until 1000064L)
+      val all = Dedup.augmentedEmbeddings(spark, dir)
+      val sliceDf = all.filter(col("id").isInCollection(slice))
+        .select(col("id").as("id_a"), col("v").as("va"))
+      val exact = sliceDf.crossJoin(all.select(col("id").as("id_b"), col("v").as("vb")))
+        .filter(col("id_a") =!= col("id_b"))
+        .filter(round(graft.functions.VectorFunctions.cosine_similarity(col("va"), col("vb")), 4) >= 0.9)
+        .select(least(col("id_a"), col("id_b")).as("a"), greatest(col("id_a"), col("id_b")).as("b"))
+        .distinct()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      // both planted families must be non-trivially present
+      assert(exact.size >= 264, s"expected >=264 true slice pairs, got ${exact.size}")
+      val annSlice = ann.filter { case (a, b) => slice(a) || slice(b) }
+      assert(exact == annSlice,
+        s"adaptive-plane ANN missed ${(exact -- annSlice).size}, extra ${(annSlice -- exact).size}")
+    }
   }
 
   test("dedup_semantic drops exactly the higher-id members of within-cell near-dup pairs") {
@@ -1287,20 +1289,22 @@ class DedupSimilaritySpec extends SparkSpec {
     // reliable checkpoint() (executor loss = retry, not job failure);
     // output must be IDENTICAL to the localCheckpoint default, and
     // checkpoint data must actually land in the directory.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
-    val baseGraph = Similarity.simKnnGraph(spark, Sf, k = 4, iters = 2).collect().toSeq
-    val baseClusters = Dedup.dedupClusters(spark, Sf).collect().toSeq
-    val (relGraph, relClusters) =
-      withConf(graft.operators.Lineage.ReliableDirKey -> ckpt.getAbsolutePath) {
-        (Similarity.simKnnGraph(spark, Sf, k = 4, iters = 2).collect().toSeq,
-          // exercises the LAZY cut variant (the CC star loop)
-          Dedup.dedupClusters(spark, Sf).collect().toSeq)
-      }
-    assert(relGraph == baseGraph, "descent output differs on the reliable-checkpoint path")
-    assert(relClusters == baseClusters, "CC output differs on the reliable-checkpoint path")
-    def files(f: java.io.File): Long =
-      if (f.isDirectory) f.listFiles().map(files).sum else 1L
-    assert(files(ckpt) > 0, "no checkpoint data written to the reliable dir")
+    withTempDir("graft_ckpt") { tmp =>
+      val ckpt = tmp.toFile
+      val baseGraph = Similarity.simKnnGraph(spark, Sf, k = 4, iters = 2).collect().toSeq
+      val baseClusters = Dedup.dedupClusters(spark, Sf).collect().toSeq
+      val (relGraph, relClusters) =
+        withConf(graft.operators.Lineage.ReliableDirKey -> ckpt.getAbsolutePath) {
+          (Similarity.simKnnGraph(spark, Sf, k = 4, iters = 2).collect().toSeq,
+            // exercises the LAZY cut variant (the CC star loop)
+            Dedup.dedupClusters(spark, Sf).collect().toSeq)
+        }
+      assert(relGraph == baseGraph, "descent output differs on the reliable-checkpoint path")
+      assert(relClusters == baseClusters, "CC output differs on the reliable-checkpoint path")
+      def files(f: java.io.File): Long =
+        if (f.isDirectory) f.listFiles().map(files).sum else 1L
+      assert(files(ckpt) > 0, "no checkpoint data written to the reliable dir")
+    }
   }
 
   test("sim_graph_search: beam recall vs brute force; held-out queries serve identically") {
@@ -2037,18 +2041,20 @@ class DedupSimilaritySpec extends SparkSpec {
     Dedup.spanGramIndexCreateEmpty(spark, tz, 8)
     val batch = (1L to 3L).map(i => (i, s"doc $i body: " + ("x" * 60))).toDF("doc_id", "text")
     Dedup.spanGramIndexAppend(spark, tz, batch)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_forget").toFile
-    withConf(graft.operators.Lineage.ReliableDirKey -> ckpt.getAbsolutePath) {
-      Dedup.spanGramIndexForget(spark, tz, Seq(2L).toDF("doc_id"))
+    withTempDir("graft_ckpt_forget") { tmp =>
+      val ckpt = tmp.toFile
+      withConf(graft.operators.Lineage.ReliableDirKey -> ckpt.getAbsolutePath) {
+        Dedup.spanGramIndexForget(spark, tz, Seq(2L).toDF("doc_id"))
+      }
+      assert(spark.table(tz).filter(col("doc_id") === 2L).head(1).isEmpty,
+        "durable-tier forget left the victim's rows behind")
+      assert(Dedup.spanIndexDocs(spark, tz) == 2L)
+      def files(f: java.io.File): Long =
+        if (f.isDirectory) f.listFiles().map(files).sum else 1L
+      assert(files(ckpt) > 0, "forget id pin wrote nothing to the reliable dir")
+      spark.sql(s"DROP TABLE IF EXISTS $tz")
+      CacheRegistry.releaseAll()
     }
-    assert(spark.table(tz).filter(col("doc_id") === 2L).head(1).isEmpty,
-      "durable-tier forget left the victim's rows behind")
-    assert(Dedup.spanIndexDocs(spark, tz) == 2L)
-    def files(f: java.io.File): Long =
-      if (f.isDirectory) f.listFiles().map(files).sum else 1L
-    assert(files(ckpt) > 0, "forget id pin wrote nothing to the reliable dir")
-    spark.sql(s"DROP TABLE IF EXISTS $tz")
-    CacheRegistry.releaseAll()
   }
 
   test("pipe_span_dedup_keep_first: keeper occurrences survive verbatim; cuts are a subset of remove-all") {

@@ -11,10 +11,10 @@ import org.apache.spark.sql.types._
   * (headerless, 17 columns in the reference's `trainData.csv` layout).
   * Where the reference checkout is present its own file is used;
   * otherwise a deterministic flight-shaped CSV in the same layout is
-  * generated once per JVM under a temp dir, so the specs that use the
-  * file only as a frame still run. The generated rows carry none of
-  * the reference's flights: checks of the reference's exact labels
-  * must `assume(referencePresent)`. */
+  * generated once per JVM under a temp dir, deleted when the JVM exits,
+  * so the specs that use the file only as a frame still run. The
+  * generated rows carry none of the reference's flights: checks of the
+  * reference's exact labels must `assume(referencePresent)`. */
 object FlightCsv {
   val Reference: Path = Paths.get("/root/reference/src/test/resources/trainData.csv")
 
@@ -57,7 +57,9 @@ object FlightCsv {
   def path(spark: SparkSession): String = synchronized {
     if (referencePresent) Reference.toString
     else generated.getOrElse {
-      val dir = Files.createTempDirectory("graft-flights").resolve("trainData").toString
+      val base = Files.createTempDirectory("graft-flights")
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(base.toFile))
+      val dir = base.resolve("trainData").toString
       write(spark, dir)
       generated = Some(dir)
       dir

@@ -89,15 +89,17 @@ class MlFilterIncrementalSpec extends SparkSpec {
 
   test("pipe_repeated_ngrams: docs shorter than the gram width count whole-text grams") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-shortdocs").toString
-    Seq(
-      (0L, "tiny"), (1L, "tiny"), (2L, "unique"),
-      (3L, "a considerably longer document body that easily exceeds the fifty character gram width"))
-      .toDF("doc_id", "text")
-      .write.parquet(s"$dir/documents.parquet")
-    val out = TextAnalysis.pipeRepeatedNgrams(spark, dir).collect()
-    // only the two identical short docs share a (whole-text) gram
-    assert(out.length == 1)
-    assert(out(0).getString(1) == "tiny" && out(0).getLong(2) == 2 && out(0).getLong(3) == 2)
+    withTempDir("graft-shortdocs") { tmp =>
+      val dir = tmp.toString
+      Seq(
+        (0L, "tiny"), (1L, "tiny"), (2L, "unique"),
+        (3L, "a considerably longer document body that easily exceeds the fifty character gram width"))
+        .toDF("doc_id", "text")
+        .write.parquet(s"$dir/documents.parquet")
+      val out = TextAnalysis.pipeRepeatedNgrams(spark, dir).collect()
+      // only the two identical short docs share a (whole-text) gram
+      assert(out.length == 1)
+      assert(out(0).getString(1) == "tiny" && out(0).getLong(2) == 2 && out(0).getLong(3) == 2)
+    }
   }
 }

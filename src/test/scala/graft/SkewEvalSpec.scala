@@ -55,12 +55,14 @@ class SkewEvalSpec extends SparkSpec {
       .select("l_quantity", "l_discount", "l_tax", "l_extendedprice")
     val spec = FeatureSpec(
       include = Some(Seq("l_quantity", "l_discount", "l_tax")), labelField = "l_extendedprice")
-    val path = java.nio.file.Files.createTempDirectory("graft-dt-eval").toString
-    val model = DecisionTree.train(li, spec, path, maxDepth = 6)
-    val scored = DecisionTree.predict(li, model, spec.copy(labelField = "unused"), "pred")
-    val (rmse, mae, r2) = DecisionTree.evaluate(scored, "l_extendedprice", "pred")
-    assert(rmse > 0 && mae > 0)
-    assert(r2 > 0.0 && r2 <= 1.0, s"r2=$r2")
-    assert(mae <= rmse)
+    withTempDir("graft-dt-eval") { tmp =>
+      val path = tmp.toString
+      val model = DecisionTree.train(li, spec, path, maxDepth = 6)
+      val scored = DecisionTree.predict(li, model, spec.copy(labelField = "unused"), "pred")
+      val (rmse, mae, r2) = DecisionTree.evaluate(scored, "l_extendedprice", "pred")
+      assert(rmse > 0 && mae > 0)
+      assert(r2 > 0.0 && r2 <= 1.0, s"r2=$r2")
+      assert(mae <= rmse)
+    }
   }
 }

@@ -916,19 +916,21 @@ class TextMultimodalSpec extends SparkSpec {
     val big1 = (1L << 44) + 7L        // would-be pack overflows Long
     val big2 = (1L << 44) + 9L
     val shared = (1 to 64).map(i => s"tok$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-chunk-ovf").toString
-    Seq((big2, shared), (big1, shared), (5L, "unique words only here"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = TextAnalysis.pipeChunkDedup(spark, dir).collect()
-    val sharedRows = rows.filter(r => r.getAs[Long]("doc_id") >= big1)
-    assert(sharedRows.length == 2)
-    val keeper = sharedRows.filterNot(_.getAs[Boolean]("is_dup"))
-    assert(keeper.map(_.getAs[Long]("doc_id")).toSeq == Seq(big1),
-      "keeper must be the lexicographically smallest (doc_id, chunk_id), " +
-        "independent of any packed-key overflow")
-    assert(sharedRows.filter(_.getAs[Boolean]("is_dup"))
-      .map(_.getAs[Long]("doc_id")).toSeq == Seq(big2))
+    withTempDir("graft-chunk-ovf") { tmp =>
+      val dir = tmp.toString
+      Seq((big2, shared), (big1, shared), (5L, "unique words only here"))
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = TextAnalysis.pipeChunkDedup(spark, dir).collect()
+      val sharedRows = rows.filter(r => r.getAs[Long]("doc_id") >= big1)
+      assert(sharedRows.length == 2)
+      val keeper = sharedRows.filterNot(_.getAs[Boolean]("is_dup"))
+      assert(keeper.map(_.getAs[Long]("doc_id")).toSeq == Seq(big1),
+        "keeper must be the lexicographically smallest (doc_id, chunk_id), " +
+          "independent of any packed-key overflow")
+      assert(sharedRows.filter(_.getAs[Boolean]("is_dup"))
+        .map(_.getAs[Long]("doc_id")).toSeq == Seq(big2))
+    }
   }
 
   test("dedup_keep_best: one keeper per cluster, keeper has max words (ties min id)") {
