@@ -15,12 +15,14 @@ import org.apache.spark.sql.functions._
   *    impurity fixed to "variance", maxDepth default 10, maxBins
   *    default 100, categorical features via the cardinality mapping,
   *    rows with null label dropped (SparkMLTrainer.java:119-127),
-  *    model persisted to a path;
+  *    model persisted to a path, in MLlib's on-disk layout with one
+  *    Spark job;
   *  - predictor (/root/reference/.../SparkMLPredictor.java:125-157):
-  *    loads the model, scores every record, appends the prediction as
-  *    a double column, preserving all input columns. Scoring walks a
-  *    flattened copy of the tree in a codegen'd expression
-  *    ([[TreePredict]]) instead of MLlib's assemble-then-transform; a
+  *    loads the model ([[load]], one Spark job), scores every record,
+  *    appends the prediction as a double column, preserving all input
+  *    columns. Scoring walks a flattened copy of the tree in a
+  *    codegen'd expression ([[TreePredict]]) instead of MLlib's
+  *    assemble-then-transform; a
   *    null feature reads as 0.0 there, as its absent slot does in
   *    MLlib, and predictions are bit-identical.
   *
@@ -75,7 +77,8 @@ object DecisionTree {
     * splits (`RandomForest.runBagged`, what `DecisionTreeRegressor.fit`
     * runs after those jobs). The branch taken (`driver` or `mllib`),
     * with the cell count and the limit, is the Spark job description of
-    * the jobs that follow the decision (the fit's rest and the save). */
+    * the jobs that follow the decision (the fit's rest and the save,
+    * whose one job writes the node rows: `GraftTreeBridge.save`). */
   def trainAssembled(assembled: DataFrame, spec0: FeatureSpec, modelPath: String,
                      maxDepth: Int = DefaultMaxDepth,
                      maxBins: Int = DefaultMaxBins): DecisionTreeRegressionModel =
@@ -126,13 +129,17 @@ object DecisionTree {
           sc.setJobDescription(s"DecisionTree fit: branch=mllib cells>$limit limit=$limit")
           input.fit(dt, splits)
         }
-      model.write.overwrite().save(modelPath)
+      GraftTreeBridge.save(prepared.sparkSession, model, modelPath)
       model
     } finally sc.setJobDescription(description)
   }
 
+  /** The model saved at `modelPath` by [[train]] or by MLlib's
+    * `DecisionTreeRegressionModel` writer, read as MLlib's reader reads
+    * it but in one job: the metadata through the file system, the node
+    * rows with their schema given (`GraftTreeBridge.load`). */
   def load(spark: org.apache.spark.sql.SparkSession, modelPath: String): DecisionTreeRegressionModel =
-    DecisionTreeRegressionModel.read.session(spark).load(modelPath)
+    GraftTreeBridge.load(spark, modelPath)
 
   /** Score `df` with a fitted/loaded model: the (sanitized) input
     * columns plus `predictionField`, a double column carrying the

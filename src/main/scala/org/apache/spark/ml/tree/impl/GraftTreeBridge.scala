@@ -1,19 +1,30 @@
 package org.apache.spark.ml.tree.impl
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.feature.Instance
 import org.apache.spark.ml.impl.Utils
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.linalg.{Vector, VectorUDT, Vectors}
 import org.apache.spark.ml.regression.{DecisionTreeRegressionModel, DecisionTreeRegressor}
-import org.apache.spark.ml.tree.{CategoricalSplit, ContinuousSplit, InternalNode, LeafNode, Node, Split, TreeConfig}
-import org.apache.spark.ml.util.{DatasetUtils, MetadataUtils}
+import org.apache.spark.ml.tree.{CategoricalSplit, ContinuousSplit, DecisionTreeModelReadWrite, InternalNode,
+  LeafNode, Node, Split, TreeConfig}
+import org.apache.spark.ml.tree.DecisionTreeModelReadWrite.{NodeData, SplitData}
+import org.apache.spark.ml.util.{DatasetUtils, DefaultParamsReader, DefaultParamsWriter, MetadataUtils}
 import org.apache.spark.mllib.tree.configuration.Strategy
 import org.apache.spark.mllib.tree.impurity.VarianceCalculator
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.collection.OpenHashMap
 import org.apache.spark.util.random.{BernoulliSampler, XORShiftRandom}
+import org.json4s.{DefaultFormats, Formats, JInt, JObject}
 
 /** Bridge exposing the package-private pieces of MLlib's tree learner
   * (its metadata, split candidates, binning, level-wise fit and node
@@ -180,19 +191,31 @@ object GraftTreeBridge {
   /** Validates `dataset` as `dt.fit` does, builds the `Instance` RDD
     * `DecisionTreeRegressor.train` builds (with its label, weight and
     * vector checks), and runs `DecisionTreeMetadata.buildMetadata`
-    * with the estimator's strategy. The metadata reads only the row
-    * count and the vector size, so when the features column's
-    * `AttributeGroup` gives that size it runs over label-only rows
-    * carrying one shared empty vector of it, and Catalyst prunes the
-    * feature columns and their assembly out of those two jobs. The
+    * with the estimator's strategy. The label and weight checks are
+    * MLlib's Catalyst expressions. The vectors are read from the
+    * internal rows and checked as they are built, with the messages of
+    * MLlib's `checkNonNanVectors`, whose Catalyst form would cost each
+    * row a `Row` conversion and an interpreted `exists`. The metadata reads
+    * only the row count and the vector size, so when the features
+    * column's `AttributeGroup` gives that size it runs over label-only
+    * rows carrying one shared empty vector of it, and Catalyst prunes
+    * the feature columns and their assembly out of those two jobs. The
     * `Instance` rows are lazy. */
   def input(dt: DecisionTreeRegressor, dataset: Dataset[_]): Input = {
     dt.transformSchema(dataset.schema)
     val featuresField = dataset.schema(dt.getFeaturesCol)
     val label = DatasetUtils.checkRegressionLabels(dt.getLabelCol)
     val weight = DatasetUtils.checkNonNegativeWeights(dt.get(dt.weightCol))
-    val instances = dataset.select(label, weight, DatasetUtils.checkNonNanVectors(dt.getFeaturesCol))
-      .rdd.map { case Row(l: Double, w: Double, v: Vector) => Instance(l, w, v) }
+    val udt = new VectorUDT
+    val instances = dataset.select(label, weight, col(dt.getFeaturesCol)).queryExecution.toRdd.map { row =>
+      if (row.isNullAt(2)) throw new IllegalArgumentException("Vectors MUST NOT be Null")
+      val v = udt.deserialize(row.getStruct(2, 4))
+      v.foreachActive { (_, x) =>
+        if (!java.lang.Double.isFinite(x)) throw new IllegalArgumentException(
+          s"Vector values MUST NOT be NaN or Infinity, but got $v")
+      }
+      Instance(row.getDouble(0), row.getDouble(1), v)
+    }
     val size = AttributeGroup.fromStructField(featuresField).size
     val labels =
       if (size < 0) instances
@@ -234,5 +257,71 @@ object GraftTreeBridge {
       if (m.hasParam(p.param.name)) m.set(m.getParam(p.param.name), p.value)
     }
     m.setParent(dt)
+  }
+
+  /** The schema `DecisionTreeRegressionModel`'s writer derives from
+    * MLlib's `NodeData`. */
+  private[tree] val NodeDataSchema: StructType = {
+    val doubles = ArrayType(DoubleType, containsNull = false)
+    def field(name: String, t: DataType) = StructField(name, t, nullable = false)
+    StructType(Seq(field("id", IntegerType), field("prediction", DoubleType), field("impurity", DoubleType),
+      StructField("impurityStats", doubles), field("rawCount", LongType), field("gain", DoubleType),
+      field("leftChild", IntegerType), field("rightChild", IntegerType),
+      StructField("split", StructType(Seq(field("featureIndex", IntegerType),
+        StructField("leftCategoriesOrThreshold", doubles), field("numCategories", IntegerType))))))
+  }
+
+  /** Writes `model` to `path` in the layout of MLlib's
+    * `model.write.overwrite().save(path)`, replacing what is there: the
+    * metadata JSON as `metadata/part-00000`, written through the
+    * file system, and the node rows as parquet under `data`, in one job
+    * with no shuffle (MLlib's writer runs a text write, then a
+    * `repartition` and a parquet write through a `TypeTag` encoder). */
+  def save(spark: SparkSession, model: DecisionTreeRegressionModel, path: String): Unit = {
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(dir, true)
+    val metadata = new Path(dir, "metadata")
+    val json = DefaultParamsWriter.getMetadataToSave(model, spark,
+      Some(JObject("numFeatures" -> JInt(model.numFeatures))))
+    val out = fs.create(new Path(metadata, "part-00000"))
+    try out.write((json + "\n").getBytes(UTF_8)) finally out.close()
+    fs.create(new Path(metadata, "_SUCCESS")).close()
+    val rows = NodeData.build(model.rootNode, 0)._1.map { n =>
+      Row(n.id, n.prediction, n.impurity, n.impurityStats, n.rawCount, n.gain, n.leftChild, n.rightChild,
+        Row(n.split.featureIndex, n.split.leftCategoriesOrThreshold, n.split.numCategories))
+    }
+    spark.createDataFrame(rows.asJava, NodeDataSchema).coalesce(NodeData.inferNumPartitions(model.numNodes))
+      .write.parquet(new Path(dir, "data").toString)
+  }
+
+  /** Reads a model in MLlib's layout, as `DecisionTreeRegressionModel.load`
+    * does: the metadata from the first non-hidden file under `metadata`
+    * through the file system, then the node rows under `data` in one
+    * job, with the schema given so none is inferred. Fails on the node
+    * data of Spark before 3.0, which has no `rawCount`. */
+  def load(spark: SparkSession, path: String): DecisionTreeRegressionModel = {
+    implicit val formats: Formats = DefaultFormats
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val file = fs.listStatus(new Path(dir, "metadata")).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith(".")).minBy(_.getName)
+    val reader = new BufferedReader(new InputStreamReader(fs.open(file), UTF_8))
+    val metadata = try DefaultParamsReader.parseMetadata(reader.readLine(),
+      classOf[DecisionTreeRegressionModel].getName) finally reader.close()
+    val nodes = spark.read.schema(NodeDataSchema).parquet(new Path(dir, "data").toString).collect().map { r =>
+      require(!r.isNullAt(4), s"The model at $path was saved by Spark ${metadata.sparkVersion}, " +
+        "whose tree node data has no rawCount column; it needs Spark 3.0 or later.")
+      val s = r.getStruct(8)
+      NodeData(r.getInt(0), r.getDouble(1), r.getDouble(2), r.getSeq[Double](3).toArray, r.getLong(4),
+        r.getDouble(5), r.getInt(6), r.getInt(7),
+        SplitData(s.getInt(0), s.getSeq[Double](1).toArray, s.getInt(2)))
+    }
+    val root = DecisionTreeModelReadWrite.buildTreeFromNodes(nodes,
+      metadata.getParamValue("impurity").extract[String])
+    val numFeatures = (metadata.metadata \ "numFeatures").extract[Int]
+    val model = new DecisionTreeRegressionModel(metadata.uid, root, numFeatures)
+    metadata.getAndSetParams(model)
+    model
   }
 }

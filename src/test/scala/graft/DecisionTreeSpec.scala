@@ -481,15 +481,21 @@ class DecisionTreeSpec extends SparkSpec {
     }
   }
 
-  test("a NaN label fails the fit with MLlib's label check") {
-    val nan = syntheticFlights(500)
-      .withColumn("delayed", when(col("dofM") === 3, lit(Double.NaN)).otherwise(col("delayed")))
-    val e = withTempDir("graft-dt-nan") { dir =>
-      intercept[Exception](DecisionTree.train(nan, trainSpec, dir.toString, maxDepth = 3))
+  test("non-finite labels and features fail the fit with MLlib's checks") {
+    val cases = Seq(
+      ("delayed", Double.NaN, "Labels MUST NOT be Null or NaN"),
+      ("scheduleDepTime", Double.NaN, "Vector values MUST NOT be NaN or Infinity"),
+      ("elapsedTime", Double.PositiveInfinity, "Vector values MUST NOT be NaN or Infinity"))
+    cases.foreach { case (column, value, message) =>
+      val bad = syntheticFlights(500)
+        .withColumn(column, when(col("dofM") === 3, lit(value)).otherwise(col(column)))
+      val e = withTempDir("graft-dt-nan") { dir =>
+        intercept[Exception](DecisionTree.train(bad, trainSpec, dir.toString, maxDepth = 3))
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toList
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains(message)),
+        s"$column = $value: cause chain: ${causes.mkString(" <- ")}")
     }
-    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toList
-    assert(causes.exists(c => String.valueOf(c.getMessage).contains("Labels MUST NOT be Null or NaN")),
-      s"cause chain: ${causes.mkString(" <- ")}")
   }
 
   test("ml_train_predict and pipe_ml_filter leave no model dir behind") {
