@@ -16,10 +16,9 @@ object Tables {
     * work; catalog tables cache it via
     * `filesourcePartitionFileCacheSize`, bare-path reads do not).
     * The logical plan is immutable and the test dirs are immutable
-    * for the life of the JVM (the rowCount memo's standing
-    * assumption), so reuse is safe. Keyed by session identity too:
-    * a DataFrame is bound to the session that resolved it, and test
-    * suites run several sessions per JVM. Memoizes METADATA only —
+    * for the life of the session, so reuse is safe. Keyed by session
+    * identity too: a DataFrame is bound to the session that resolved
+    * it, and test suites run several sessions per JVM. Memoizes METADATA only —
     * every execution still scans the parquet data.
     *
     * The weak keying alone cannot collect anything: each memoized
@@ -94,14 +93,20 @@ object Tables {
   def documents(s: SparkSession, dir: String): DataFrame = apply(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = apply(s, dir, "embeddings")
 
-  /** Row count of `<dir>/<name>.parquet`, memoized per path. Callers
-    * use table cardinality to pick cache/plan strategies (e.g. the
-    * ngram-jaccard array-cache crossover); the count job is
-    * metadata-only but still a per-invocation scan+job, so memoize —
-    * the test dirs are immutable for the life of the JVM. */
+  /** Row count of `<dir>/<name>.parquet`, memoized per (session,
+    * path) like the relation memo above. Callers use table
+    * cardinality to pick cache/plan strategies (the dedup family's
+    * `Dedup.Scale` gate); the count job is metadata-only but still a
+    * per-invocation scan+job, so memoize. Keyed by session too, so a
+    * new session re-counts a directory rewritten since an earlier
+    * session counted it, instead of gating on the stale count. The
+    * values are plain counts, so the weak session keys collect once
+    * the session is unreachable. */
   private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]]()
   def rowCount(s: SparkSession, dir: String, name: String): Long =
-    countMemo.computeIfAbsent(s"$dir/$name.parquet",
-      _ => apply(s, dir, name).count())
+    countMemo.synchronized {
+      countMemo.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap())
+    }.computeIfAbsent(s"$dir/$name.parquet", _ => apply(s, dir, name).count())
 }

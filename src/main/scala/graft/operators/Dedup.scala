@@ -16,6 +16,48 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  // --- corpus scale gate ---------------------------------------------
+
+  /** The dedup family's ONE corpus-size decision. Each dir-based entry
+    * point reads it once, from the memoized document count
+    * ([[Tables.rowCount]], per session and path), and passes it to
+    * its frame-parameterized core; the cores default to
+    * [[Scale.Default]] (no cache, broadcast probe), and the plan
+    * specs force the other two tiers through that argument.
+    *
+    * `cache`: persist the shingle arrays / exploded gram tables (and
+    * broadcast the n-gram-Jaccard verify sides) — a win below the
+    * measured crossover, a loss past it (see [[ngramJaccardPairs]],
+    * [[dedupSubstring]]).
+    *
+    * `shuffleGrams`: the span cutters repartition the gram scan on `g`
+    * once instead of broadcasting the repeated-gram set. Repeated
+    * grams are ∝ duplicated text, and on crawl-scale corpora (10-50%
+    * duplication at 100 TB) the df≥2 set is far past any broadcast
+    * threshold — without the switch Spark would silently
+    * sort-merge-join, shuffling the ~20-bytes-per-character gram
+    * stream ON TOP of the count's pruned shuffle. The forced shape
+    * shuffles once and the count and probe reuse the exchange
+    * (plan-asserted in PlanSpec). The limit comes from round 15's
+    * crossover measurement on the 10× replica: at 50k docs / 10×
+    * duplication the broadcast shape still wins, so the switch sits
+    * well above every testable scale and exists for the cluster
+    * regime. */
+  private[graft] sealed abstract class Scale(val cache: Boolean, val shuffleGrams: Boolean)
+  private[graft] object Scale {
+    case object Small extends Scale(cache = true, shuffleGrams = false)
+    case object Default extends Scale(cache = false, shuffleGrams = false)
+    case object Huge extends Scale(cache = false, shuffleGrams = true)
+    val CacheDocLimit = 20000L
+    val SpanBroadcastDocLimit = 2000000L
+    def of(s: SparkSession, dir: String): Scale = {
+      val docs = Tables.rowCount(s, dir, "documents")
+      if (docs <= CacheDocLimit) Small
+      else if (docs > SpanBroadcastDocLimit) Huge
+      else Default
+    }
+  }
+
   // --- exact ---------------------------------------------------------
 
   /** Exact dedup: group by a 192-bit compound hash (xxhash64 + md5) of
@@ -59,7 +101,14 @@ object Dedup {
     * array_intersect, so the filter only prunes, never alters scores.
     * At 100 TB the join shuffles (prefix-hash, doc_id, shingle-array)
     * — bounded by prefix length, not document size. */
-  def dedupNgramJaccard(s: SparkSession, dir: String, n: Int = 12, tau: Double = 0.8): DataFrame = {
+  def dedupNgramJaccard(s: SparkSession, dir: String, n: Int = 12, tau: Double = 0.8): DataFrame =
+    ngramJaccardPairs(Tables.documents(s, dir), n, tau, Scale.of(s, dir))
+
+  /** [[dedupNgramJaccard]] over a document frame, at the given
+    * [[Scale]] — factored so the plan spec can force the uncached,
+    * unbroadcast at-scale form on a small corpus. */
+  private[graft] def ngramJaccardPairs(documents: DataFrame, n: Int, tau: Double,
+                                       scale: Scale = Scale.Default): DataFrame = {
     // The shingle table and the df-ordered prefixes each feed BOTH
     // sides of a self-join plus the verification joins; persist them
     // (memory-and-disk) or the whole upstream recomputes per branch —
@@ -72,11 +121,10 @@ object Dedup {
     // parquet text (measured on the 10x replica set). Cache only
     // below the crossover; the narrow (doc_id, sz, sh) prefix table
     // below is cached unconditionally — long columns cache cleanly.
-    val docsBase = Tables.documents(s, dir)
+    val docsBase = documents
       .select(col("doc_id"), sort_array(expr(shingleExpr(n))).as("shingles"))
       .withColumn("sz", size(col("shingles")))
-    val docs =
-      if (Tables.rowCount(s, dir, "documents") <= 20000) docsBase.cacheTracked else docsBase
+    val docs = if (scale.cache) docsBase.cacheTracked else docsBase
     // Canonical order = ascending document frequency (PPJoin): the
     // prefix then holds each document's RAREST shingles, so candidate
     // pairs stay near-linear even when the corpus shares vocabulary.
@@ -138,8 +186,7 @@ object Dedup {
     // joins that shuffle candidate rows CARRYING the first join's
     // array payload); past the cutoff the hint is withheld and the
     // joins shuffle — the 100 TB shape.
-    def vside(d: org.apache.spark.sql.DataFrame) =
-      if (Tables.rowCount(s, dir, "documents") <= 20000) broadcast(d) else d
+    def vside(d: DataFrame) = if (scale.cache) broadcast(d) else d
     val withSets = cands
       .join(vside(docs.select(col("doc_id").as("id_a"), col("shingles").as("sa"), col("sz").as("sz_a"))), "id_a")
       .join(vside(docs.select(col("doc_id").as("id_b"), col("shingles").as("sb"), col("sz").as("sz_b"))), "id_b")
@@ -850,8 +897,6 @@ object Dedup {
       converged = cur == prev
       prev = cur
       iter += 1
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        println(s"[cc] round $iter edges=${cur._1}")
     }
     if (!converged)
       throw new IllegalStateException(
@@ -930,26 +975,26 @@ object Dedup {
     // at sf0.1); above it, the uncached form's REUSED EXCHANGE (one
     // (g, doc_id) shuffle feeds both sides of the self-join) is the
     // 100 TB shape — recomputing a codegen'd scan is cheap, spilling a
-    // 16×-corpus cache is not. Same rowCount guard as the jaccard
+    // 16×-corpus cache is not. Same [[Scale]] gate as the jaccard
     // shingle cache.
-    val gramsBase = Tables.documents(s, dir)
+    val grams = Tables.documents(s, dir)
       .select(col("doc_id"), explode(array_distinct(
         graft.functions.VectorFunctions.ngram_hashes(lower(col("text")), n))).as("g"))
-    val small = Tables.rowCount(s, dir, "documents") <= 20000
-    val grams = if (small) gramsBase.cacheTracked else gramsBase
-    substringPairs(grams, maxDf, cacheHits = small)
+    substringPairs(grams, maxDf, Scale.of(s, dir))
   }
 
   /** [[dedupSubstring]]'s pair pipeline over an exploded (doc_id, g)
     * gram table — factored so the plan spec can drive the UNCACHED
-    * at-scale form and assert its reused exchange. `cacheHits` also
-    * persists the rare-gram hit rows (gram occurrences of kept grams
-    * only — the candidate set, tiny below the crossover, proportional
-    * to DUPLICATED text at scale, hence the same guard): the
-    * steady-state warm run then reads one small cache instead of
-    * re-joining (measured 1.4 → 0.6 s at sf0.1). */
-  private[graft] def substringPairs(grams: DataFrame, maxDf: Int,
-                                    cacheHits: Boolean = false): DataFrame = {
+    * at-scale form and assert its reused exchange. A caching
+    * [[Scale]] persists the gram table and also the rare-gram hit
+    * rows (gram occurrences of kept grams only — the candidate set,
+    * tiny below the crossover, proportional to DUPLICATED text at
+    * scale, hence the same gate): the steady-state warm run then
+    * reads one small cache instead of re-joining (measured 1.4 →
+    * 0.6 s at sf0.1). */
+  private[graft] def substringPairs(gramsBase: DataFrame, maxDf: Int,
+                                    scale: Scale = Scale.Default): DataFrame = {
+    val grams = if (scale.cache) gramsBase.cacheTracked else gramsBase
     // ONE gram shuffle, three consumers: the explicit repartition on
     // the gram hash clusters the stream once, and then the df-count
     // aggregate, the hit probe, and the self-join's second side all
@@ -966,7 +1011,7 @@ object Dedup {
     // df ≤ maxDf ⟹ the join below sees the COMPLETE doc set per kept
     // gram, so pairs-from-join ≡ pairs-from-complete-list.
     val hitsBase = ex.join(rare, "g")
-    val hits = if (cacheHits) hitsBase.cacheTracked else hitsBase
+    val hits = if (scale.cache) hitsBase.cacheTracked else hitsBase
     hits.select(col("g"), col("doc_id").as("id_a"))
       .join(hits.select(col("g"), col("doc_id").as("id_b")), Seq("g"))
       .filter(col("id_a") < col("id_b"))
@@ -1032,8 +1077,8 @@ object Dedup {
     * [[substringPairs]], no self-join forces a gram partitioning
     * here). On duplication-HEAVY corpora — the operator's target
     * regime at 100 TB, where the repeated-gram set itself outgrows
-    * any broadcast threshold — callers above [[SpanBroadcastDocLimit]]
-    * documents get the deliberate fallback instead: one forced gram
+    * any broadcast threshold — corpora that the [[Scale]] gate puts
+    * past its doc limit get the deliberate fallback instead: one forced gram
     * repartition of the scan (the [[substringPairs]] shape) that both
     * the count and the probe reuse as a single exchange, rather than
     * an accidental sort-merge-join shuffle of the fat stream on top
@@ -1051,30 +1096,40 @@ object Dedup {
     * identically); the spec pins that a second pass finds nothing on
     * real data. */
   def pipeSpanDedup(s: SparkSession, dir: String, n: Int = 50): DataFrame =
-    spanDedupCore(Tables.documents(s, dir).select(col("doc_id"), col("text")), n,
-        cacheGrams = Tables.rowCount(s, dir, "documents") <= 20000,
-        forceGramShuffle = Tables.rowCount(s, dir, "documents") > SpanBroadcastDocLimit)
-      .select(col("doc_id"), col("is_ascii"), col("lc_stable"), col("n_spans_cut"),
+    certified(spanDedupCore(Tables.documents(s, dir).select(col("doc_id"), col("text")), n,
+      Scale.of(s, dir)))
+
+  /** The span-cut registry entries' certified projection: cut
+    * evidence plus the cleaned text's length and md5, by doc_id. */
+  private def certified(cut: DataFrame): DataFrame =
+    cut.select(col("doc_id"), col("is_ascii"), col("lc_stable"), col("n_spans_cut"),
         col("n_chars_cut"), col("cut_ranges"),
         length(col("clean_text")).cast("long").as("clean_len"),
         md5(col("clean_text")).as("clean_md5"))
       .orderBy("doc_id")
 
-  /** Documents past this count take the forced-gram-repartition shape
-    * in [[pipeSpanDedup]]/[[pipeSpanDedupKeepFirst]]: repeated grams
-    * are ∝ duplicated text, and on crawl-scale corpora (10-50%
-    * duplication at 100 TB) the df≥2 gram set is far past any
-    * broadcast threshold — without the explicit switch, Spark would
-    * silently sort-merge-join, shuffling the ~20-bytes-per-character
-    * gram stream ON TOP of the count's pruned shuffle. The forced
-    * shape repartitions the scan on g ONCE and both consumers reuse
-    * the exchange (ReusedExchange — one fat shuffle total, plan-
-    * asserted in PlanSpec). Threshold calibrated from round 15's
-    * crossover measurement on the 10× replica: at 50k docs / 10×
-    * duplication the broadcast shape still wins, so the switch sits
-    * well above every testable scale and exists for the cluster
-    * regime. */
-  val SpanBroadcastDocLimit: Long = 2000000L
+  /** The span cutters' input: the document frame plus the two
+    * diagnostic flags every output row carries. */
+  private def spanBase(docs: DataFrame): DataFrame = docs
+    .withColumn("is_ascii", length(col("text")) === octet_length(col("text")))
+    .withColumn("lc_stable", length(lower(col("text"))) === length(col("text")))
+
+  /** Documents the span cutters can cut: at least `n` code points, and
+    * a code-point count that lowercasing keeps — gram offsets computed
+    * on lower(text) only apply to text when the two align
+    * position-for-position (scaladoc caveat; U+0130-class documents
+    * pass through uncut). */
+  private def spanEligible(n: Int): Column =
+    length(col("text")) >= n && length(lower(col("text"))) === length(col("text"))
+
+  /** (doc_id, carry…, p, g): one row per code-point n-char window of
+    * every eligible document, `g` the window's rolling hash over the
+    * lowercased text ([[graft.functions.NgramHashesChars]]). */
+  private def gramPositions(docs: DataFrame, n: Int, carry: String*): DataFrame =
+    docs.filter(spanEligible(n))
+      .select((col("doc_id") +: carry.map(col)) :+ posexplode(
+        graft.functions.VectorFunctions.ngram_hashes_chars(lower(col("text")), n))
+        .as(Seq("p", "g")): _*)
 
   /** Shared candidate→confirmed hit derivation for the span-cut
     * family: code-point-window rolling-hash CANDIDATES (df ≥ 2 on the
@@ -1094,32 +1149,21 @@ object Dedup {
     * by positions-per-doc), re-extracts ∝ hit windows, and runs one
     * sub-keyed window over hit rows — everything ∝ duplicated text,
     * the fat per-character stream untouched. */
-  private def spanCandidateSubs(base: DataFrame, n: Int, cacheGrams: Boolean,
-                                forceGramShuffle: Boolean): DataFrame = {
-    import graft.CacheRegistry.Cacheable
-    val posBase0 = base
-      // length/substr both count code points; docs whose code-point
-      // count changes under lowercasing (U+0130-class) are excluded —
-      // gram offsets computed on lower(text) only apply to text when
-      // the two align position-for-position (scaladoc caveat)
-      .filter(length(col("text")) >= n &&
-        length(lower(col("text"))) === length(col("text")))
-      .select(col("doc_id"), posexplode(
-        graft.functions.VectorFunctions.ngram_hashes_chars(lower(col("text")), n))
-        .as(Seq("p", "g")))
+  private def spanCandidateSubs(base: DataFrame, n: Int, scale: Scale): DataFrame = {
+    val posBase0 = gramPositions(base, n)
     // Past-broadcast fallback (duplication-heavy corpora): repartition
     // the scan on g once; the count needs no further exchange and the
     // probe co-locates — one fat shuffle, reused. Below the limit the
     // probe broadcasts the df>=2 set and the fat stream never
     // shuffles at all (plan-verified both ways in PlanSpec).
-    val posBase = if (forceGramShuffle) posBase0.repartition(col("g")) else posBase0
+    val posBase = if (scale.shuffleGrams) posBase0.repartition(col("g")) else posBase0
     // the occurrence count and the hit probe both read the
-    // per-position gram table — `cacheGrams` caches it below the
-    // dedupSubstring crossover (callers gate on the same rowCount
-    // guard; the exploded table is ~20 bytes PER CORPUS CHARACTER, so
-    // at scale the uncached double codegen scan is the 100 TB shape:
-    // recomputing a scan is cheap, spilling a 20×-corpus cache is not)
-    val pos = if (cacheGrams) posBase.cacheTracked else posBase
+    // per-position gram table — a caching [[Scale]] caches it below
+    // the dedupSubstring crossover (the exploded table is ~20 bytes
+    // PER CORPUS CHARACTER, so at scale the uncached double codegen
+    // scan is the 100 TB shape: recomputing a scan is cheap, spilling
+    // a 20×-corpus cache is not)
+    val pos = if (scale.cache) posBase.cacheTracked else posBase
     val rep = pos.groupBy("g").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2).select("g")
     // EXPLICIT broadcast below the doc limit (guide §3.1: size
@@ -1134,17 +1178,13 @@ object Dedup {
     // the query's ~19-29 s total at sf0.1; AQE cannot rescue it
     // because the conversion looks at the 28 MB pre-filter map
     // output, not the 0.5 MB df>=2 survivor set). The actual df>=2
-    // set is ∝ duplicated text; EVERY dir-based entry point
-    // (pipeSpanDedup/KeepFirst, both multibyte twins, pipeSpanIngest,
-    // pipeFullIngest) threads forceGramShuffle =
-    // rowCount > SpanBroadcastDocLimit, so past the limit the
-    // forced-shuffle branch takes over and this broadcast never sees
-    // a corpus whose repeated-gram set could outgrow the 8 GB
-    // broadcast cap. Frame-parameterized core callers (specs) pass
-    // small literal frames. (r20: the gate was previously applied
-    // only by the two pipeSpanDedup* wrappers — an ungated caller at
-    // cluster scale would have force-broadcast regardless of size.)
-    val probe = if (forceGramShuffle) pos.join(rep.hint("merge"), "g")
+    // set is ∝ duplicated text, and every dir-based entry point
+    // passes its [[Scale]], so past the doc limit the forced-shuffle
+    // branch takes over and this broadcast never sees a corpus whose
+    // repeated-gram set could outgrow the 8 GB broadcast cap.
+    // Frame-parameterized core callers (specs) pass small literal
+    // frames at the default scale.
+    val probe = if (scale.shuffleGrams) pos.join(rep.hint("merge"), "g")
                 else pos.join(broadcast(rep), "g")
     val hits0 = probe.select(col("doc_id"), col("p"))
     // confirmation: re-extract the raw window at each candidate
@@ -1190,13 +1230,10 @@ object Dedup {
     * feed the cleaned corpus back through and assert zero further
     * cuts. */
   private[graft] def spanDedupCore(docs: DataFrame, n: Int,
-                                   cacheGrams: Boolean = false,
-                                   forceGramShuffle: Boolean = false): DataFrame = {
+                                   scale: Scale = Scale.Default): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = docs
-      .withColumn("is_ascii", length(col("text")) === octet_length(col("text")))
-      .withColumn("lc_stable", length(lower(col("text"))) === length(col("text")))
-    val subs = spanCandidateSubs(base, n, cacheGrams, forceGramShuffle)
+    val base = spanBase(docs)
+    val subs = spanCandidateSubs(base, n, scale)
     // convict on the raw window: ≥ 2 occurrences of the SUBSTRING
     // (one hit-sized window shuffle on sub — collision candidates
     // whose raw windows are unique fall out here). Measured choice:
@@ -1270,25 +1307,15 @@ object Dedup {
     * each), never ∝ characters — the keep-first decision costs one
     * more window over the same duplicated-text-sized stream. */
   def pipeSpanDedupKeepFirst(s: SparkSession, dir: String, n: Int = 50): DataFrame =
-    spanDedupKeepFirstCore(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")), n,
-        cacheGrams = Tables.rowCount(s, dir, "documents") <= 20000,
-        forceGramShuffle = Tables.rowCount(s, dir, "documents") > SpanBroadcastDocLimit)
-      .select(col("doc_id"), col("is_ascii"), col("lc_stable"), col("n_spans_cut"),
-        col("n_chars_cut"), col("cut_ranges"),
-        length(col("clean_text")).cast("long").as("clean_len"),
-        md5(col("clean_text")).as("clean_md5"))
-      .orderBy("doc_id")
+    certified(spanDedupKeepFirstCore(
+      Tables.documents(s, dir).select(col("doc_id"), col("text")), n, Scale.of(s, dir)))
 
   /** [[pipeSpanDedupKeepFirst]]'s frame-parameterized core. */
   private[graft] def spanDedupKeepFirstCore(docs: DataFrame, n: Int,
-                                            cacheGrams: Boolean = false,
-                                            forceGramShuffle: Boolean = false): DataFrame = {
+                                            scale: Scale = Scale.Default): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = docs
-      .withColumn("is_ascii", length(col("text")) === octet_length(col("text")))
-      .withColumn("lc_stable", length(lower(col("text"))) === length(col("text")))
-    val subs = spanCandidateSubs(base, n, cacheGrams, forceGramShuffle)
+    val base = spanBase(docs)
+    val subs = spanCandidateSubs(base, n, scale)
     // keeper = lexicographic (doc_id, p) argmin among the CONFIRMED
     // raw-window occurrences (raw-sub window key — see the measured
     // digest-vs-raw note in spanDedupCore), PACKED into one long
@@ -1412,26 +1439,12 @@ object Dedup {
     * (`pipe_span_dedup_multibyte`) — the hash-verified evidence that
     * span cutting is exact on non-ASCII text. */
   def pipeSpanDedupMultibyte(s: SparkSession, dir: String, n: Int = 50): DataFrame =
-    spanDedupCore(multibyteDocs(s, dir), n,
-        cacheGrams = Tables.rowCount(s, dir, "documents") <= 20000,
-        forceGramShuffle = Tables.rowCount(s, dir, "documents") > SpanBroadcastDocLimit)
-      .select(col("doc_id"), col("is_ascii"), col("lc_stable"), col("n_spans_cut"),
-        col("n_chars_cut"), col("cut_ranges"),
-        length(col("clean_text")).cast("long").as("clean_len"),
-        md5(col("clean_text")).as("clean_md5"))
-      .orderBy("doc_id")
+    certified(spanDedupCore(multibyteDocs(s, dir), n, Scale.of(s, dir)))
 
   /** [[pipeSpanDedupKeepFirst]] over the multi-byte-injected corpus
     * (`pipe_span_keep_first_multibyte`). */
   def pipeSpanKeepFirstMultibyte(s: SparkSession, dir: String, n: Int = 50): DataFrame =
-    spanDedupKeepFirstCore(multibyteDocs(s, dir), n,
-        cacheGrams = Tables.rowCount(s, dir, "documents") <= 20000,
-        forceGramShuffle = Tables.rowCount(s, dir, "documents") > SpanBroadcastDocLimit)
-      .select(col("doc_id"), col("is_ascii"), col("lc_stable"), col("n_spans_cut"),
-        col("n_chars_cut"), col("cut_ranges"),
-        length(col("clean_text")).cast("long").as("clean_len"),
-        md5(col("clean_text")).as("clean_md5"))
-      .orderBy("doc_id")
+    certified(spanDedupKeepFirstCore(multibyteDocs(s, dir), n, Scale.of(s, dir)))
 
   // --- incremental span dedup against persisted corpus gram state ---
 
@@ -1462,13 +1475,7 @@ object Dedup {
     * build-time price, toward the reference tool's suffix-array
     * class). */
   private def gramWindowCounts(docs: DataFrame, n: Int): DataFrame = {
-    val eligible = docs
-      .filter(length(col("text")) >= n &&
-        length(lower(col("text"))) === length(col("text")))
-    val real = eligible
-      .select(col("doc_id"), col("text"), posexplode(
-        graft.functions.VectorFunctions.ngram_hashes_chars(lower(col("text")), n))
-        .as(Seq("p", "g")))
+    val real = gramPositions(docs, n, "text")
       .select(col("doc_id"), col("g"), col("p"),
         unhex(md5(lower(col("text")).substr(col("p") + 1, lit(n)))).as("sh"))
       .groupBy("doc_id", "g", "sh")
@@ -1495,7 +1502,8 @@ object Dedup {
     // pile one row per ineligible document into partition pmod(0, P),
     // breaking the bounded-rows-per-partition sizing rule on corpora
     // where short/unstable docs are a large fraction.
-    val sentinels = docs.join(eligible.select("doc_id"), Seq("doc_id"), "left_anti")
+    val sentinels = docs.join(docs.filter(spanEligible(n)).select("doc_id"), Seq("doc_id"),
+        "left_anti")
       .select(col("doc_id"), col("doc_id").as("g"), unhex(md5(lit(""))).as("sh"),
         lit(0).as("df"), lit(0).as("mp"))
     real.union(sentinels)
@@ -1852,22 +1860,33 @@ object Dedup {
     * keys but per-position, so a BULK arrival comparable to the
     * corpus outgrows the broadcast budget; at that point the right
     * tool is the batch operator over (corpus ∪ arrival)
-    * ([[spanDedupCore]], optionally forceGramShuffle) — one fat
+    * ([[spanDedupCore]] at the [[Scale]] of the union) — one fat
     * shuffle beats a corpus-sized broadcast, and the incremental
     * index buys nothing when the arrival IS a corpus. */
   private[graft] def spanDedupIncrementalCore(s: SparkSession, indexTable: String,
                                               batch: DataFrame, n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.CacheRegistry.Cacheable
-    val base = batch
-      .withColumn("is_ascii", length(col("text")) === octet_length(col("text")))
-      .withColumn("lc_stable", length(lower(col("text"))) === length(col("text")))
-    val pos = base
-      .filter(length(col("text")) >= n &&
-        length(lower(col("text"))) === length(col("text")))
-      .select(col("doc_id"), posexplode(
-        graft.functions.VectorFunctions.ngram_hashes_chars(lower(col("text")), n))
-        .as(Seq("p", "g")))
+    val base = spanBase(batch)
+    // doc_id pruned at the scan
+    val (idxHot, subs) = incrementalProbe(s, indexTable, base, n, "g", "sh", "df")
+    val cdf = idxHot.groupBy("sh").agg(sum(col("df")).as("cdf"))
+    val hits = subs
+      .withColumn("bcnt", count(lit(1)).over(Window.partitionBy("sh")))
+      .join(broadcast(cdf), Seq("sh"), "left")
+      .filter(col("bcnt") + coalesce(col("cdf"), lit(0L)) >= 2)
+      .select("doc_id", "p")
+    spanRebuild(base, spanIslands(hits, n))
+  }
+
+  /** The incremental cores' one index probe: the batch's gram
+    * positions, the index rows whose (pb, g) the batch's grams hit
+    * (projected to `idxCols`, cached), and the batch's candidate
+    * (doc_id, p, sh) rows — positions whose gram hash matches the
+    * index or repeats within the batch, each with its raw window's
+    * 128-bit md5. Returns (index rows, candidates). */
+  private def incrementalProbe(s: SparkSession, indexTable: String, base: DataFrame,
+                               n: Int, idxCols: String*): (DataFrame, DataFrame) = {
+    val pos = gramPositions(base, n)
       .cacheTracked // feeds the probe key set, both candidate branches, and the batch count
     // recover first — a crashed forget must never present a
     // half-swapped index; then read the layout's partition count
@@ -1893,7 +1912,7 @@ object Dedup {
     // row-group stats skip inside the DPP-surviving partitions
     val idxHot = probeIndexScan(s, indexTable, batchGrams)
       .join(broadcast(batchG), Seq("pb", "g"))
-      .select(col("g"), col("sh"), col("df")) // doc_id pruned at the scan
+      .select(idxCols.map(col): _*)
       .cacheTracked
     val candIdx = pos.join(broadcast(idxHot.select("g").distinct()), Seq("g"), "left_semi")
     val repB = pos.groupBy("g").agg(count(lit(1)).as("bdf"))
@@ -1908,27 +1927,16 @@ object Dedup {
     // hit-sized exchange carries 16-byte keys)
     val subs = subsAt(base, candPos, n)
       .select(col("doc_id"), col("p"), unhex(md5(col("sub"))).as("sh"))
-    val cdf = idxHot.groupBy("sh").agg(sum(col("df")).as("cdf"))
-    val hits = subs
-      .withColumn("bcnt", count(lit(1)).over(Window.partitionBy("sh")))
-      .join(broadcast(cdf), Seq("sh"), "left")
-      .filter(col("bcnt") + coalesce(col("cdf"), lit(0L)) >= 2)
-      .select("doc_id", "p")
-    spanRebuild(base, spanIslands(hits, n))
+    (idxHot, subs)
   }
 
   /** Registry entry for [[spanDedupIncrementalCore]]: the shard
     * (doc_id % 10 == 0) arrives against the index over everything
     * else; certified projection identical to [[pipeSpanDedup]]. */
   def pipeSpanIncremental(s: SparkSession, dir: String, n: Int = 50): DataFrame =
-    spanDedupIncrementalCore(s, spanGramIndexFor(s, dir, n),
-        Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("text")), n)
-      .select(col("doc_id"), col("is_ascii"), col("lc_stable"), col("n_spans_cut"),
-        col("n_chars_cut"), col("cut_ranges"),
-        length(col("clean_text")).cast("long").as("clean_len"),
-        md5(col("clean_text")).as("clean_md5"))
-      .orderBy("doc_id")
+    certified(spanDedupIncrementalCore(s, spanGramIndexFor(s, dir, n),
+      Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
+        .select(col("doc_id"), col("text")), n))
 
   /** KEEP-FIRST incremental span cutting
     * (`pipe_span_keep_first_incremental`) — the fourth cell of the
@@ -1948,36 +1956,10 @@ object Dedup {
   private[graft] def spanDedupKeepFirstIncrementalCore(
       s: SparkSession, indexTable: String, batch: DataFrame, n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.CacheRegistry.Cacheable
-    val base = batch
-      .withColumn("is_ascii", length(col("text")) === octet_length(col("text")))
-      .withColumn("lc_stable", length(lower(col("text"))) === length(col("text")))
-    val pos = base
-      .filter(length(col("text")) >= n &&
-        length(lower(col("text"))) === length(col("text")))
-      .select(col("doc_id"), posexplode(
-        graft.functions.VectorFunctions.ngram_hashes_chars(lower(col("text")), n))
-        .as(Seq("p", "g")))
-      .cacheTracked
-    StagedRewrite.recover(s, indexTable)
-    val p = spanIndexPb(s, indexTable)
-    // same probe-key shape as the remove-all form: pb domain guard
-    // doubles as the DPP selectivity signal (see spanDedupIncrementalCore);
-    // one shared distinct gram frame feeds keys + inline filter
-    val batchGrams = pos.select("g").distinct().cacheTracked
-    val batchG = withPb(batchGrams, p)
-      .filter(col("pb").between(lit(0), lit(p - 1)))
-    val idxHot = probeIndexScan(s, indexTable, batchGrams)
-      .join(broadcast(batchG), Seq("pb", "g"))
-      .cacheTracked
-    val candIdx = pos.join(broadcast(idxHot.select("g").distinct()), Seq("g"), "left_semi")
-    val repB = pos.groupBy("g").agg(count(lit(1)).as("bdf"))
-      .filter(col("bdf") >= 2).select("g")
-    val candB = pos.join(repB, Seq("g"), "left_semi")
-    val candPos = candIdx.select("doc_id", "p")
-      .union(candB.select("doc_id", "p")).distinct()
-    val subs = subsAt(base, candPos, n)
-      .select(col("doc_id"), col("p"), unhex(md5(col("sub"))).as("sh"))
+    val base = spanBase(batch)
+    // every index column: doc_id and mp elect the corpus-side keeper
+    val (idxHot, subs) =
+      incrementalProbe(s, indexTable, base, n, "pb", "g", "doc_id", "sh", "df", "mp")
     // per raw-window digest: corpus occurrence total + the corpus-side
     // argmin candidate (envelope-guarded like the batch side)
     val cstat = idxHot
@@ -2001,14 +1983,9 @@ object Dedup {
     * shard arrives against the index over everything else; certified
     * projection identical to [[pipeSpanDedupKeepFirst]]. */
   def pipeSpanKeepFirstIncremental(s: SparkSession, dir: String, n: Int = 50): DataFrame =
-    spanDedupKeepFirstIncrementalCore(s, spanGramIndexFor(s, dir, n),
-        Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("text")), n)
-      .select(col("doc_id"), col("is_ascii"), col("lc_stable"), col("n_spans_cut"),
-        col("n_chars_cut"), col("cut_ranges"),
-        length(col("clean_text")).cast("long").as("clean_len"),
-        md5(col("clean_text")).as("clean_md5"))
-      .orderBy("doc_id")
+    certified(spanDedupKeepFirstIncrementalCore(s, spanGramIndexFor(s, dir, n),
+      Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
+        .select(col("doc_id"), col("text")), n))
 
   /** Approximate-dedup quality evaluation (`dedup_eval`) — the
     * measurement a production rollout of MinHash-LSH needs before

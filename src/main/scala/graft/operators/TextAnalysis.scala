@@ -307,11 +307,8 @@ object TextAnalysis {
     * discipline). Cut evidence rides along (never silent), cleaned
     * text certified by md5 as in `pipe_span_dedup`. */
   def pipeSpanIngest(s: SparkSession, dir: String, n: Int = 50): DataFrame = {
-    val cleaned = graft.operators.Dedup.spanDedupCore(
-      Tables.documents(s, dir).select(col("doc_id"), col("text")), n,
-      cacheGrams = Tables.rowCount(s, dir, "documents") <= 20000,
-      forceGramShuffle = Tables.rowCount(s, dir, "documents") >
-        graft.operators.Dedup.SpanBroadcastDocLimit)
+    val cleaned = Dedup.spanDedupCore(
+      Tables.documents(s, dir).select(col("doc_id"), col("text")), n, Dedup.Scale.of(s, dir))
     gopherSignals(cleaned.withColumn("text", col("clean_text")))
       .select(col("doc_id"), col("is_ascii"), col("n_spans_cut"),
         col("n_chars_cut"), md5(col("clean_text")).as("clean_md5"),
@@ -415,11 +412,8 @@ object TextAnalysis {
     // cut-before-gate: spans repeated anywhere in the scrubbed CORPUS
     // are removed from the incoming docs, quality signals computed on
     // what survives (the inner join below keeps shard rows only)
-    val cut = graft.operators.Dedup.spanDedupCore(
-        scrubAll.select(col("doc_id"), col("clean").as("text")), n = 50,
-        cacheGrams = Tables.rowCount(s, dir, "documents") <= 20000,
-        forceGramShuffle = Tables.rowCount(s, dir, "documents") >
-          graft.operators.Dedup.SpanBroadcastDocLimit)
+    val cut = Dedup.spanDedupCore(
+        scrubAll.select(col("doc_id"), col("clean").as("text")), n = 50, Dedup.Scale.of(s, dir))
       .select(col("doc_id"), col("n_spans_cut"), col("n_chars_cut"),
         col("clean_text"))
     val gated = shard.join(cut, Seq("doc_id"))

@@ -235,38 +235,70 @@ class PlanSpec extends SparkSpec {
 
   test("span dedup past-broadcast fallback: forced gram exchange, no broadcast probe, identical cuts") {
     import org.apache.spark.sql.functions.col
+    import graft.operators.Dedup
     val docs = Tables.documents(spark, Sf).select(col("doc_id"), col("text"))
     // the deliberate duplication-heavy-corpus shape: repartition the
     // gram scan on g once (count and probe both consume it) instead
     // of letting a too-big-to-broadcast rep set silently force a
     // sort-merge shuffle of the fat stream ON TOP of the count's
-    val forced = graft.operators.Dedup.spanDedupCore(docs, 50, forceGramShuffle = true)
-    val forcedRows = forced.collect()
-    val plan = forced.queryExecution.executedPlan.toString
-    assert(plan.contains("REPARTITION_BY_COL"),
-      s"forced shape lost its explicit gram exchange:\n$plan")
-    assert("BroadcastHashJoin.*\\[g#".r.findFirstIn(plan).isEmpty,
-      s"forced shape still broadcasts the repeated-gram set:\n$plan")
-    assert(!plan.contains("CartesianProduct"))
-    // both shapes certify the same cleaned corpus
-    val default = graft.operators.Dedup.spanDedupCore(docs, 50).collect()
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[Long]("doc_id"), r.getAs[Long]("n_chars_cut"), r.getAs[String]("cut_ranges"))
-    assert(forcedRows.map(key).toSet == default.map(key).toSet,
-      "forced-shuffle shape cuts differently from the broadcast shape")
+    for ((name, core) <- Seq(
+        "remove-all" -> ((sc: Dedup.Scale) => Dedup.spanDedupCore(docs, 50, sc)),
+        "keep-first" -> ((sc: Dedup.Scale) => Dedup.spanDedupKeepFirstCore(docs, 50, sc)))) {
+      val forced = core(Dedup.Scale.Huge)
+      val forcedRows = forced.collect()
+      val plan = forced.queryExecution.executedPlan.toString
+      assert(plan.contains("REPARTITION_BY_COL"),
+        s"$name: forced shape lost its explicit gram exchange:\n$plan")
+      assert("BroadcastHashJoin.*\\[g#".r.findFirstIn(plan).isEmpty,
+        s"$name: forced shape still broadcasts the repeated-gram set:\n$plan")
+      assert(!plan.contains("CartesianProduct"))
+      // both shapes certify the same cleaned corpus
+      val default = core(Dedup.Scale.Default).collect()
+      def key(r: org.apache.spark.sql.Row) =
+        (r.getAs[Long]("doc_id"), r.getAs[Long]("n_chars_cut"), r.getAs[String]("cut_ranges"))
+      assert(forcedRows.map(key).toSet == default.map(key).toSet,
+        s"$name: forced-shuffle shape cuts differently from the broadcast shape")
+      CacheRegistry.releaseAll()
+    }
+  }
+
+  test("ngram jaccard past the cache limit: no shingle cache, no broadcast verify sides, identical pairs") {
+    import graft.operators.Dedup
+    // the shape a corpus past Scale.CacheDocLimit takes; auto-broadcast
+    // is off so the spec corpus plans the joins a real corpus would
+    // (only the small tier's explicit hint may still broadcast)
+    def pairs(scale: Dedup.Scale) = {
+      CacheRegistry.releaseAll()
+      val df = Dedup.ngramJaccardPairs(Tables.documents(spark, Sf), 12, 0.8, scale)
+      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      (rows, planOf(df))
+    }
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val (atScale, plan) = pairs(Dedup.Scale.Default)
+      assert("InMemoryTableScan \\[[^\\]]*shingles#".r.findFirstIn(plan).isEmpty,
+        s"shingle arrays cached past the cache limit:\n$plan")
+      assert("BroadcastHashJoin \\[id_[ab]#".r.findFirstIn(plan).isEmpty,
+        s"doc-array verify side broadcast past the cache limit:\n$plan")
+      val (small, smallPlan) = pairs(Dedup.Scale.Small)
+      assert("InMemoryTableScan \\[[^\\]]*shingles#".r.findFirstIn(smallPlan).isDefined,
+        s"small tier lost its shingle cache:\n$smallPlan")
+      for (side <- Seq("id_a", "id_b"))
+        assert(s"BroadcastHashJoin \\[$side#".r.findFirstIn(smallPlan).isDefined,
+          s"small tier lost its broadcast $side verify side:\n$smallPlan")
+      assert(atScale.nonEmpty, "no near-dup pair at spec scale — the comparison is vacuous")
+      assert(atScale == small, "the uncached shape finds different pairs")
+    }
     CacheRegistry.releaseAll()
   }
 
   test("span-family dir entry points thread the broadcast gate: below the doc limit the probe broadcasts, no forced gram exchange") {
-    // r20: pipeSpanIngest, pipeFullIngest and the multibyte twins
-    // previously called the span cores with the DEFAULT
-    // forceGramShuffle=false — an unconditional broadcast(rep)
-    // regardless of corpus size, which past the 8 GB broadcast cap
-    // fails the job outright at cluster scale. They now thread
-    // rowCount > SpanBroadcastDocLimit like pipeSpanDedup; this pins
-    // the below-limit side (gate false at test scale → broadcast
-    // probe, no forced repartition), so an inverted gate would fail
-    // here, and the forced branch itself is covered by the
+    // every dir-based span entry point passes Dedup.Scale.of(s, dir)
+    // to its core (an entry left at the core's default would
+    // broadcast regardless of corpus size, which past the 8 GB
+    // broadcast cap fails the job outright at cluster scale); this
+    // pins the below-limit side (no gram shuffle at test scale →
+    // broadcast probe, no forced repartition), so an inverted gate
+    // would fail here, and the forced branch itself is covered by the
     // past-broadcast fallback test above.
     for ((name, df) <- Seq(
         "pipe_span_ingest" -> TextAnalysis.pipeSpanIngest(spark, Sf),
@@ -433,7 +465,7 @@ class PlanSpec extends SparkSpec {
     // cut-list build side is corpus-sized and must NOT broadcast —
     // force the threshold down and assert the fallback is a doc_id
     // sort-merge join with bit-identical output (the two-shape
-    // treatment forceGramShuffle already has)
+    // treatment the gram-shuffle tier already has)
     CacheRegistry.releaseAll()
     val docs = Tables.documents(spark, Sf).select(col("doc_id"), col("text"))
     def key(r: org.apache.spark.sql.Row) =

@@ -16,6 +16,18 @@ class SourcesSpec extends SparkSpec {
     assert(df.filter(col("tailNum").startsWith("N")).count() == df.count())
   }
 
+  test("Tables.rowCount is memoized per session: a new session counts a rewritten dir afresh") {
+    withTempDir("graft-rowcount") { dir =>
+      import spark.implicits._
+      def docs(n: Int) = (1L to n.toLong).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+      val path = s"$dir/documents.parquet"
+      docs(3).write.parquet(path)
+      assert(Tables.rowCount(spark, dir.toString, "documents") == 3L)
+      docs(5).write.mode("overwrite").parquet(path)
+      assert(Tables.rowCount(spark.newSession(), dir.toString, "documents") == 5L)
+    }
+  }
+
   test("json-lines reader with schema routes corrupt records instead of failing") {
     withTempDir("graft-json") { dir =>
       val f = new java.io.File(dir.toFile, "data.json")
